@@ -132,56 +132,56 @@ def train_centroids_lloyd(
             ).alias("v6"),
         )
         # the integer translation feeds every round AND the seed collect;
-        # one materialization, released before returning
+        # one materialization. unpersist() cannot release a checkpoint:
+        # its blocks go when the ContextCleaner collects v6f after return
         .localCheckpoint(eager=True)
     )
-    try:
-        seeds = v6f.orderBy("vid").limit(n_cells).collect()
-        cents: list[tuple[int, list[int]]] = sorted(
-            (int(r["vid"]), list(r["v6"])) for r in seeds
+    seeds = v6f.orderBy("vid").limit(n_cells).collect()
+    cents: list[tuple[int, list[int]]] = sorted(
+        (int(r["vid"]), list(r["v6"])) for r in seeds
+    )
+    if not cents:  # zero-row input: no centroids, an empty index
+        return []
+
+    def argmin_sql(cs: list[tuple[int, list[int]]]) -> str:
+        # exact integer squared-L2 per centroid; least() over
+        # (dist, cid) structs is the lexicographic min — the same
+        # tie-break as the r12 trainer's F.min(struct(dist, cluster))
+        terms = []
+        for cid, c6 in cs:
+            arr = (
+                "array(" + ", ".join(f"{int(x)}L" for x in c6) + ")"
+            )
+            d = (
+                f"aggregate(zip_with(v6, {arr}, "
+                "(x, y) -> (x - y) * (x - y)), 0L, "
+                "(acc, v) -> acc + v)"
+            )
+            terms.append(
+                f"named_struct('dist', {d}, 'cluster', {int(cid)})"
+            )
+        if len(terms) == 1:
+            return f"{terms[0]}.cluster"
+        return f"least({', '.join(terms)}).cluster"
+
+    for _ in range(iters):
+        rows = (
+            v6f.select(
+                F.expr(argmin_sql(cents)).alias("cluster"), "v6"
+            )
+            .select("cluster", F.posexplode("v6").alias("pos0", "val"))
+            .groupBy("cluster", "pos0")
+            .agg(F.expr("sum(val) div count(*)").cast("long").alias("c6"))
+            .collect()
         )
-
-        def argmin_sql(cs: list[tuple[int, list[int]]]) -> str:
-            # exact integer squared-L2 per centroid; least() over
-            # (dist, cid) structs is the lexicographic min — the same
-            # tie-break as the r12 trainer's F.min(struct(dist, cluster))
-            terms = []
-            for cid, c6 in cs:
-                arr = (
-                    "array(" + ", ".join(f"{int(x)}L" for x in c6) + ")"
-                )
-                d = (
-                    f"aggregate(zip_with(v6, {arr}, "
-                    "(x, y) -> (x - y) * (x - y)), 0L, "
-                    "(acc, v) -> acc + v)"
-                )
-                terms.append(
-                    f"named_struct('dist', {d}, 'cluster', {int(cid)})"
-                )
-            if len(terms) == 1:
-                return f"{terms[0]}.cluster"
-            return f"least({', '.join(terms)}).cluster"
-
-        for _ in range(iters):
-            rows = (
-                v6f.select(
-                    F.expr(argmin_sql(cents)).alias("cluster"), "v6"
-                )
-                .select("cluster", F.posexplode("v6").alias("pos0", "val"))
-                .groupBy("cluster", "pos0")
-                .agg(F.expr("sum(val) div count(*)").cast("long").alias("c6"))
-                .collect()
+        by_c: dict[int, dict[int, int]] = {}
+        for r in rows:
+            by_c.setdefault(int(r["cluster"]), {})[int(r["pos0"])] = int(
+                r["c6"]
             )
-            by_c: dict[int, dict[int, int]] = {}
-            for r in rows:
-                by_c.setdefault(int(r["cluster"]), {})[int(r["pos0"])] = int(
-                    r["c6"]
-                )
-            cents = sorted(
-                (cid, [d[p] for p in sorted(d)]) for cid, d in by_c.items()
-            )
-    finally:
-        v6f.unpersist()
+        cents = sorted(
+            (cid, [d[p] for p in sorted(d)]) for cid, d in by_c.items()
+        )
     return sorted(
         (cid, [x / 1_000_000.0 - 1.0 for x in c6]) for cid, c6 in cents
     )

@@ -74,10 +74,14 @@ def ensure_protobuf() -> bool:
         os.environ.setdefault(
             "TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK", "true"
         )
-        existing = os.environ.get("PYTHONPATH", "")
-        if d not in existing.split(os.pathsep):
-            os.environ["PYTHONPATH"] = (
-                existing + os.pathsep + d if existing else d
-            )
+        export_pythonpath(d)
         return True
     return False
+
+
+def export_pythonpath(d: str) -> None:
+    """Append ``d`` to the exported ``PYTHONPATH`` (once), which a JVM
+    started afterwards passes on to every python worker."""
+    existing = os.environ.get("PYTHONPATH", "")
+    if d not in existing.split(os.pathsep):
+        os.environ["PYTHONPATH"] = existing + os.pathsep + d if existing else d

@@ -11,6 +11,10 @@ single factory owns every scale-relevant knob so the same code runs on
     row-pickled.
   * Session timezone pinned to UTC so timestamp semantics match the DuckDB
     oracle (duckdb timestamps are UTC-naive).
+  * Python workers fork from the engine's daemon (``pyworker.py``: no
+    per-task zip-archive re-reads), and the engine's parent directory is
+    appended to the exported ``PYTHONPATH`` so workers import the engine
+    from any driver cwd.
 """
 
 from __future__ import annotations
@@ -39,9 +43,18 @@ def get_spark(
     # before the JVM exists: export the protobuf runtime env so python
     # workers can speak the transformWithStateInPandas state protocol
     # (no-op where a wheel is installed or no runtime exists on disk)
-    from qa_data_pipeline_rag_llm_spark.protobuf_compat import ensure_protobuf
+    from qa_data_pipeline_rag_llm_spark.protobuf_compat import (
+        ensure_protobuf,
+        export_pythonpath,
+    )
 
     ensure_protobuf()
+    # ...and the directory holding this package: the worker daemon and
+    # UDFs pickled by reference import the engine by name, and a worker's
+    # sys.path otherwise holds only the driver's cwd
+    export_pythonpath(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
     master = master or f"local[{DEFAULT_CPUS}]"
     if shuffle_partitions is None and master.startswith("local"):
         shuffle_partitions = DEFAULT_CPUS
@@ -60,6 +73,11 @@ def get_spark(
         # --- scale: python boundary is Arrow, never row-pickle ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        # workers fork from a daemon without per-task zip re-reads
+        .config(
+            "spark.python.daemon.module",
+            "qa_data_pipeline_rag_llm_spark.pyworker",
+        )
         # --- scale: broadcast threshold (dims like region/nation always BHJ) ---
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # --- local-mode ergonomics ---

@@ -263,6 +263,17 @@ def test_lloyd_trainer_matches_reference(spark, tables):
     assert got == want
 
 
+def test_lloyd_trainer_zero_rows_returns_no_centroids(spark, tables):
+    """A zero-row corpus trains an empty index instead of building a
+    malformed ``least()`` argmin over no centroids."""
+    from qa_data_pipeline_rag_llm_spark.operators.ivf import (
+        train_centroids_lloyd,
+    )
+
+    emb = tables["embeddings"].filter(F.col("vec_id") < 0)
+    assert train_centroids_lloyd(emb, n_cells=8, iters=3) == []
+
+
 def test_dot_norm_name_path_bit_identical(spark, tables):
     """r13: dot/norm built from column NAMES parse to the same Catalyst
     expression as the Column-lambda twins — results must be bit-identical
