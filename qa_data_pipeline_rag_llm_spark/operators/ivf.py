@@ -115,7 +115,7 @@ def train_centroids_lloyd(
     zero-shuffle projection and the only exchange per round is the
     map-side-combined groupBy(cluster, pos) update (output bounded at
     k × dims rows per task). Re-adjudicated at sf≈1 where shuffle bytes
-    dominate (tools/ab_lloyd.py, interleaved): 10.4–11.7 s → 1.65–2.06 s
+    dominate (interleaved A/B, SCALING.md): 10.4–11.7 s → 1.65–2.06 s
     per train call (6.3×), and 1.40 → 1.03 s at sf0.1 — centroid lists
     EXACTLY equal at both scales (same v6 translation, same
     lexicographic (dist, cid) tie-break, same floor average; pinned by
@@ -205,10 +205,18 @@ def ivf_assign(
     a single-file parquet scan plans as ONE task, and with no shuffle in
     this projection the n_cells × dims interpreted fold per row would
     all run on one core; measured 3.0 → 0.9 s on the sf0.1 seeded-IVF
-    query)."""
+    query).
+
+    No centroids (a zero-row corpus seeds none) means no cells: every
+    vector gets a NULL ``cell``, which joins no probe cell."""
     from qa_data_pipeline_rag_llm_spark.operators.util import (
         ensure_parallelism,
     )
+
+    if not centroids:
+        return vectors.select(
+            F.col(id_col), F.col(vec_col), F.lit(None).cast("int").alias("cell")
+        )
 
     vectors = ensure_parallelism(vectors)
     dps = vectors.select(
@@ -238,7 +246,12 @@ def ivf_probe_cells(
     probe_vec: str = "probe_vec",
 ) -> DataFrame:
     """(probe_id, cell): the ``nprobe`` best cells per probe. The probe set
-    is small by contract; the explode + rank touches probes × n_cells rows."""
+    is small by contract; the explode + rank touches probes × n_cells rows.
+    No centroids means no cells to probe: an empty frame."""
+    if not centroids:
+        return probes.select(
+            F.col(probe_id), F.lit(None).cast("int").alias("cell")
+        ).limit(0)
     pairs = F.expr(
         "array("
         + ", ".join(

@@ -454,11 +454,14 @@ def run_api_stream(
 
     ``Trigger.AvailableNow`` drains only the prefetched first page of a
     Python simple stream reader (probed on this Spark build), so the
-    query runs on a tight processing-time trigger and stops once the
-    memory sink holds every backing row — the deterministic end state
-    the page-number offsets guarantee (each page appended exactly once).
+    query runs on a tight processing-time trigger until
+    ``processAllAvailable()`` returns: the exhausted cursor holds its
+    offset, the source reports no new data, and the memory sink holds
+    every backing row — the deterministic end state the page-number
+    offsets guarantee (each page appended exactly once). Waiting on the
+    query, not polling the sink with ``count()``, keeps the number of
+    Spark jobs independent of the host's speed.
     """
-    import time
     import uuid
 
     register_qa_api(spark)
@@ -480,22 +483,13 @@ def run_api_stream(
         .trigger(processingTime="0 seconds")
         .start()
     )
-    deadline = time.time() + 120
     try:
-        while spark.table(name).count() < expected:
-            if q.exception() is not None:
-                # surface the real root cause immediately instead of
-                # burning the deadline and masking it as a TimeoutError
-                # (review r03)
-                raise q.exception()
-            if time.time() >= deadline:
-                # a silent partial return would look like an engine bug
-                # downstream (hash mismatch / truncated data); fail loud.
-                raise TimeoutError(
-                    f"qa_api stream drained {spark.table(name).count()}"
-                    f"/{expected} rows within 120s"
-                )
-            time.sleep(0.2)
+        q.processAllAvailable()  # raises the query's own failure, if any
     finally:
         q.stop()
+    drained = spark.table(name).count()
+    if drained < expected:
+        # a silent partial return would look like an engine bug
+        # downstream (hash mismatch / truncated data); fail loud.
+        raise RuntimeError(f"qa_api stream drained {drained}/{expected} rows")
     return spark.table(name).localCheckpoint(eager=True)

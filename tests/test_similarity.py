@@ -329,3 +329,39 @@ def test_dot_name_path_qualified_alias(spark, tables):
     assert sorted((r["i"], repr(r["d"])) for r in got) == sorted(
         (r["i"], repr(r["d"])) for r in want
     )
+
+
+def test_ivf_assign_without_centroids_gives_null_cells(spark, tables):
+    """No centroids: every vector keeps its row with a typed NULL cell
+    instead of failing on an argmax over nothing."""
+    from qa_data_pipeline_rag_llm_spark.operators.ivf import ivf_assign
+
+    emb = tables["embeddings"].filter(F.col("vec_id") < 3)
+    out = ivf_assign(emb, [])
+    assert out.schema["cell"].dataType.simpleString() == "int"
+    rows = out.collect()
+    assert len(rows) == 3 and all(r["cell"] is None for r in rows)
+
+
+def test_ivf_probe_cells_without_centroids_is_empty(spark, tables):
+    from qa_data_pipeline_rag_llm_spark.operators.ivf import ivf_probe_cells
+
+    out = ivf_probe_cells(_probes(tables), [], 2)
+    assert out.columns == ["probe_id", "cell"]
+    assert out.count() == 0
+
+
+def test_ann_ivf_topk_zero_rows(spark, tables):
+    """A zero-row corpus seeds no centroids; the search returns zero rows
+    with the usual schema."""
+    from qa_data_pipeline_rag_llm_spark.operators.ivf import ann_ivf_topk
+
+    emb = tables["embeddings"].filter(F.col("vec_id") < 0)
+    probes = emb.select(
+        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
+    )
+    out = ann_ivf_topk(emb, probes, k=3, n_cells=4, nprobe=2)
+    assert out.columns == ["probe_id", "vec_id", "sim", "rank"]
+    assert out.count() == 0
+    # probes with no cells to search find nothing either
+    assert ann_ivf_topk(emb, _probes(tables), k=3).count() == 0

@@ -7,7 +7,8 @@ Gates:
   2. fingerprint ledger current with the tree     (change-aware rotation)
   3. driver emulation over the 50-query sample prefix (plain session)
   4. hostile-session emulation over a probe set   (UTC/partition repins)
-  5. bench.py at sf0.01 emits one well-formed JSON line
+  5. bench.py at sf0.01 emits one well-formed JSON line (its detail
+     file, BENCH_FULL_sf0.01.json, is untracked)
 
 Usage: python tools/preflight.py [--full]   (--full sweeps the whole
 registry in gates 3/4 instead of the prefix — ~20 min)

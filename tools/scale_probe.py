@@ -22,6 +22,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import headline  # noqa: E402
 from qa_data_pipeline_rag_llm_spark.plans.queries import REGISTRY  # noqa: E402
 from qa_data_pipeline_rag_llm_spark.session import get_spark  # noqa: E402
 
@@ -171,28 +172,6 @@ PROBE = [
     "lm_ref_surprisal_by_source",
 ]
 
-# The bench.py headline set (17 queries) — `--headline` probes exactly
-# these, at any sf dir, so the decade table in SCALING.md can be
-# regenerated in one command per scale.
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_top_orders",
-    "q5_nation_revenue",
-    "topk_orders_per_customer",
-    "order_line_ids",
-    "sessionize_events",
-    "text_stats_documents",
-    "minhash_signatures_documents",
-    "cosine_topk_embeddings",
-    "qa_pipeline_docs",
-    "q6_forecast_revenue",
-    "q10_returned_items",
-    "q13_customer_distribution",
-    "asof_click_before_purchase",
-    "chunk_documents",
-    "corpus_prep_pipeline",
-    "hybrid_rrf_retrieval",
-]
 
 # table -> columns to offset per replica
 OFFSETS = {
@@ -380,7 +359,9 @@ def main() -> None:
         for a in sys.argv[1:]
         if a.startswith("--only=")
     ]
-    pool = HEADLINE if "--headline" in sys.argv else PROBE
+    # --headline probes exactly bench.py's headline set, at any sf dir, so
+    # the decade table in SCALING.md regenerates in one command per scale
+    pool = headline() if "--headline" in sys.argv else PROBE
     probe = [n for n in pool if not only or n in only[0]]
     spark = get_spark(app_name="scale_probe")
     spark.sparkContext.setLogLevel("ERROR")
