@@ -12,6 +12,8 @@ similarity is a relational rank.
 
 from __future__ import annotations
 
+from typing import Sequence
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column
@@ -57,6 +59,40 @@ def norm(a: Column | str) -> Column:
         )
     return F.sqrt(
         F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
+    )
+
+
+def lit_array_sql(values: Sequence[float | int]) -> str:
+    """SQL text of a literal array — the whole list goes to Spark as ONE
+    parser call instead of one py4j round trip per ``F.lit`` element.
+
+    Ints (Python or NumPy) become BIGINT literals ``{x}L``; everything
+    else becomes ``CAST('{float(x)!r}' AS DOUBLE)``. ``repr`` of a Python
+    float is the shortest decimal that round-trips, so the parsed double
+    is bit-identical to the input; ``float()`` first, because under
+    NumPy 2 a ``numpy.float64`` reprs as ``np.float64(…)``, which would
+    not parse (ADVICE r12)."""
+    return (
+        "array("
+        + ", ".join(
+            f"{int(x)}L"
+            if isinstance(x, (int, np.integer))
+            else f"CAST('{float(x)!r}' AS DOUBLE)"
+            for x in values
+        )
+        + ")"
+    )
+
+
+def dot_lit_sql(vec_col: str, weights: Sequence[float]) -> str:
+    """SQL text for the index-order double fold of vec · literal-array
+    (bit-identical to DuckDB ``list_dot_product`` over ``DOUBLE[]``).
+    ``vec_col`` is the COLUMN NAME; the weights are always doubles."""
+    arr = lit_array_sql([float(x) for x in weights])
+    return (
+        f"aggregate(zip_with(`{vec_col}`, {arr}, "
+        "(x, y) -> CAST(x AS DOUBLE) * y), CAST(0.0 AS DOUBLE), "
+        "(acc, v) -> acc + v)"
     )
 
 

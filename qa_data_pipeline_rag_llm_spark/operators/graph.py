@@ -92,7 +92,18 @@ def _large_star(e_canon: DataFrame) -> DataFrame:
     u instead of groupBy + self-join (two exchanges → one), and the
     output is NOT deduplicated here: duplicate (v, m) rows cannot change
     small-star's min and the round's final distinct removes them — the
-    same edge SET flows, one fewer exchange per round."""
+    same edge SET flows, one fewer exchange per round.
+
+    Hub-skew trade-off: a window over u has no map-side combine, so ALL
+    of a hub's edges shuffle to ONE task, which buffers the whole
+    partition (spilling past ``spark.sql.windowExec.buffer.spill.threshold``)
+    — a degree-d hub costs one task O(d) rows. The r12 groupBy form
+    pre-aggregated the min map-side (one row per map task and u) but
+    paid a second exchange to join it back to every edge, where AQE's
+    skew-join split can break the hub's partition up. Near-dup graphs
+    are small blobs, so the window form wins here; a power-law graph
+    with million-degree hubs is where the groupBy form would be
+    measured against it (not measured yet)."""
     sym = e_canon.union(
         e_canon.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
@@ -115,7 +126,8 @@ def _small_star(lt: DataFrame) -> DataFrame:
     (one redundant union + distinct exchange per round, now gone). The
     min is a window over u; neighbor and self edges are emitted in one
     pass via explode; the single distinct both dedups and restores the
-    canonical invariant for the next round."""
+    canonical invariant for the next round. Same hub-skew trade-off as
+    ``_large_star``: every edge of a hub u lands in one window task."""
     w_u = Window.partitionBy("u")
     return (
         lt.withColumn("m", F.min("v").over(w_u))

@@ -32,34 +32,27 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from qa_data_pipeline_rag_llm_spark.functions.vectors import dot, norm, safe_denom
+from qa_data_pipeline_rag_llm_spark.functions.vectors import (
+    dot,
+    dot_lit_sql,
+    lit_array_sql,
+    norm,
+    safe_denom,
+)
 
+# Scale guard on the one-expression argmin: k centroids × dims integer
+# literals are parsed into EVERY row's projection. Sizing (2 cores, 2,000
+# rows): 1,024 literals plan in 0.2 s and run in 0.3 s; 16,384 in 1.2 s
+# and 3.6–4.7 s; 98,304 (~1 MB of SQL) in 2.8 s and 17–19 s. Registry
+# callers use ≤ 1,024 (16 × 64 and 8 × 64).
+MAX_ARGMIN_LITERALS = 65_536
 
-def _dot_lit_sql(vec_col: str, weights: Sequence[float]) -> str:
-    """SQL text for the index-order double fold of vec · literal-array.
-
-    r12: built as ONE parser call instead of dims × F.lit + two Python
-    lambdas — each of those is a py4j round trip, and the old per-element
-    construction dominated the IVF queries' wall-clock (~3.5 s of DRIVER
-    time per ann_ivf_topk build at 16 cells × 64 dims; the parsed tree is
-    the same Catalyst expression, repr'd doubles round-trip exactly, so
-    results are bit-identical)."""
-    arr = (
-        "array("
-        + ", ".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in weights)
-        + ")"
-    )
-    return (
-        f"aggregate(zip_with(`{vec_col}`, {arr}, "
-        "(x, y) -> CAST(x AS DOUBLE) * y), CAST(0.0 AS DOUBLE), "
-        "(acc, v) -> acc + v)"
-    )
-
-
-def _dot_lit(vec_col: str, weights: Sequence[float]) -> Column:
-    """Index-order double fold of vec · literal-array (codegen'd, no UDF).
-    ``vec_col`` is the COLUMN NAME (the fold is one parsed expression)."""
-    return F.expr(_dot_lit_sql(vec_col, weights))
+# components → nonnegative integers v6 = round((v+1)·1e6): translation
+# preserves distances but keeps floor-division identical across engines
+_V6_SQL = (
+    "transform(`{vec}`, x -> CAST(round((CAST(x AS DOUBLE) + 1.0) "
+    "* 1000000) AS BIGINT))"
+)
 
 
 def seed_centroids(
@@ -71,9 +64,10 @@ def seed_centroids(
     """Deterministic coarse quantizer: the vectors with the ``n_cells``
     smallest ids. Driver-side collect of a bounded tiny set (same pattern
     as similarity.hyperplane_weights); ``train_centroids_lloyd`` below is
-    the offline-trained alternative for production scale — the plan
-    shape downstream is unchanged (``ann_recall_ivf_trained`` measures
-    the recall delta between the two)."""
+    the trained alternative — the same init refined by fixed-point
+    Lloyd rounds, with the plan shape downstream unchanged
+    (``ann_recall_ivf_trained`` measures the recall delta between the
+    two)."""
     rows = (
         # orderBy+limit, not a value filter: `id < n_cells` returns zero
         # centroids (AttributeError downstream) for any id space that is
@@ -86,50 +80,62 @@ def seed_centroids(
     return sorted((r[0], list(r[1])) for r in rows)
 
 
-def train_centroids_lloyd(
+def argmin_sql(cents: Sequence[tuple[int, Sequence[int]]]) -> str:
+    """ONE parsed SQL expression for the nearest integer centroid of the
+    ``v6`` array column: exact squared-L2 per centroid; ``least()`` over
+    (dist, cluster) structs is the lexicographic min, so ties go to the
+    smaller cluster id. Raises ``ValueError`` above
+    ``MAX_ARGMIN_LITERALS`` centroid components (or with no centroids)
+    before any expression text is built."""
+    n_lit = sum(len(c6) for _, c6 in cents)
+    if not cents or n_lit > MAX_ARGMIN_LITERALS:
+        raise ValueError(
+            f"argmin needs 1..{MAX_ARGMIN_LITERALS} centroid literals "
+            f"(k × dims, MAX_ARGMIN_LITERALS); got {len(cents)} centroids "
+            f"with {n_lit}"
+        )
+    terms = [
+        "named_struct('dist', aggregate(zip_with(v6, "
+        f"{lit_array_sql([int(x) for x in c6])}, "
+        "(x, y) -> (x - y) * (x - y)), 0L, "
+        f"(acc, v) -> acc + v), 'cluster', {int(cid)})"
+        for cid, c6 in cents
+    ]
+    if len(terms) == 1:
+        return f"{terms[0]}.cluster"
+    return f"least({', '.join(terms)}).cluster"
+
+
+def lloyd_centroids_v6(
     vectors: DataFrame,
     n_cells: int,
-    iters: int = 2,
+    iters: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-) -> list[tuple[int, list[float]]]:
-    """The offline-trained coarse quantizer ``seed_centroids``'s
-    docstring promised (VERDICT r09 ask #6) — deterministic fixed-point
-    Lloyd's, the same arithmetic as ``kmeans_fixedpoint_embeddings``
-    (``plans/queries_graph_profile.py``) so the ENTIRE trainer stays
-    DuckDB-twin-able: components translate to nonnegative integers
-    ``v6 = round((v+1)·1e6)`` (translation preserves distances but keeps
-    floor-division identical across engines), init = the ``n_cells``
-    smallest-id vectors, per round an exact-integer squared-L2 argmin
-    (ties → smaller cluster id) then an integer floor-average centroid
-    update. Returns float centroids ``c6/1e6 − 1`` — identical IEEE
-    doubles from identical integers in any engine.
+) -> list[tuple[int, list[int]]]:
+    """Deterministic fixed-point Lloyd's — the engine's one k-means loop
+    (``train_centroids_lloyd`` and ``kmeans_fixedpoint_embeddings`` both
+    run it), returning INTEGER centroids ``(cid, c6)`` sorted by cid.
 
-    Scale shape (r13, VERDICT r12 ask #4): the r12 trainer ran one
-    pos-join + TWO corpus-sized shuffles per round (the flattened
-    (vid, pos, v6) frame through groupBy(vid, cluster) then a re-join);
-    this one assigns with ONE parsed SQL expression — an exact-integer
-    squared-L2 argmin over literal centroid arrays (the k × dims
-    centroid table collects to the driver each round: bounded state,
-    the same bound ``seed_centroids`` lives on) — so assignment is a
-    zero-shuffle projection and the only exchange per round is the
-    map-side-combined groupBy(cluster, pos) update (output bounded at
-    k × dims rows per task). Re-adjudicated at sf≈1 where shuffle bytes
-    dominate (interleaved A/B, SCALING.md): 10.4–11.7 s → 1.65–2.06 s
-    per train call (6.3×), and 1.40 → 1.03 s at sf0.1 — centroid lists
-    EXACTLY equal at both scales (same v6 translation, same
-    lexicographic (dist, cid) tie-break, same floor average; pinned by
-    tests/test_similarity.py::test_lloyd_trainer_matches_reference).
-    An empty cluster simply drops out of the floor-average (GROUP BY
-    semantics, mirrored by the SQL twin) and the index serves fewer
-    cells."""
+    Components translate to ``v6 = round((v+1)·1e6)``, init = the
+    ``n_cells`` smallest-id vectors, and each round assigns by the
+    exact-integer ``argmin_sql`` (ties → smaller cluster id), then
+    updates each centroid by integer floor-average. An empty cluster
+    drops out of the floor-average (GROUP BY semantics) and the model
+    has fewer centroids. Every step is integer arithmetic, so the loop
+    is replayed bit-for-bit by a DuckDB recursive CTE
+    (``plans/oracle_fragments.lloyd_ctes``) and by
+    tests/test_similarity.py::test_lloyd_trainer_matches_reference.
+
+    Scale shape: assignment is a zero-shuffle projection, so the only
+    exchange per round is the map-side-combined groupBy(cluster, pos)
+    update (at most k × dims rows per task); the k × dims centroid table
+    collects to the driver each round, bounded by
+    ``MAX_ARGMIN_LITERALS``. A zero-row input returns no centroids."""
     v6f = (
         vectors.select(
             F.col(id_col).alias("vid"),
-            F.expr(
-                f"transform(`{vec_col}`, x -> CAST(round((CAST(x AS "
-                "DOUBLE) + 1.0) * 1000000) AS BIGINT))"
-            ).alias("v6"),
+            F.expr(_V6_SQL.format(vec=vec_col)).alias("v6"),
         )
         # the integer translation feeds every round AND the seed collect;
         # one materialization. unpersist() cannot release a checkpoint:
@@ -140,35 +146,11 @@ def train_centroids_lloyd(
     cents: list[tuple[int, list[int]]] = sorted(
         (int(r["vid"]), list(r["v6"])) for r in seeds
     )
-    if not cents:  # zero-row input: no centroids, an empty index
+    if not cents:  # zero-row input: no centroids, an empty model
         return []
-
-    def argmin_sql(cs: list[tuple[int, list[int]]]) -> str:
-        # exact integer squared-L2 per centroid; least() over
-        # (dist, cid) structs is the lexicographic min — the same
-        # tie-break as the r12 trainer's F.min(struct(dist, cluster))
-        terms = []
-        for cid, c6 in cs:
-            arr = (
-                "array(" + ", ".join(f"{int(x)}L" for x in c6) + ")"
-            )
-            d = (
-                f"aggregate(zip_with(v6, {arr}, "
-                "(x, y) -> (x - y) * (x - y)), 0L, "
-                "(acc, v) -> acc + v)"
-            )
-            terms.append(
-                f"named_struct('dist', {d}, 'cluster', {int(cid)})"
-            )
-        if len(terms) == 1:
-            return f"{terms[0]}.cluster"
-        return f"least({', '.join(terms)}).cluster"
-
     for _ in range(iters):
         rows = (
-            v6f.select(
-                F.expr(argmin_sql(cents)).alias("cluster"), "v6"
-            )
+            v6f.select(F.expr(argmin_sql(cents)).alias("cluster"), "v6")
             .select("cluster", F.posexplode("v6").alias("pos0", "val"))
             .groupBy("cluster", "pos0")
             .agg(F.expr("sum(val) div count(*)").cast("long").alias("c6"))
@@ -182,9 +164,50 @@ def train_centroids_lloyd(
         cents = sorted(
             (cid, [d[p] for p in sorted(d)]) for cid, d in by_c.items()
         )
-    return sorted(
-        (cid, [x / 1_000_000.0 - 1.0 for x in c6]) for cid, c6 in cents
-    )
+    return cents
+
+
+def lloyd_assign(
+    vectors: DataFrame,
+    cents: Sequence[tuple[int, Sequence[int]]],
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(id, cluster int): each vector's nearest integer centroid from
+    ``lloyd_centroids_v6`` — a zero-shuffle projection (v6 translation,
+    then ``argmin_sql``) over the input's OWN lineage, never the
+    trainer's checkpoint, so a returned frame pins no checkpoint blocks
+    in a long-lived session (VERDICT r05 #1). No centroids (a zero-row
+    input) gives every row a NULL cluster."""
+    if not cents:
+        return vectors.select(
+            F.col(id_col), F.lit(None).cast("int").alias("cluster")
+        )
+    return vectors.select(
+        F.col(id_col), F.expr(_V6_SQL.format(vec=vec_col)).alias("v6")
+    ).select(id_col, F.expr(argmin_sql(cents)).alias("cluster"))
+
+
+def train_centroids_lloyd(
+    vectors: DataFrame,
+    n_cells: int,
+    iters: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> list[tuple[int, list[float]]]:
+    """The offline-trained coarse quantizer ``seed_centroids``'s
+    docstring promised (VERDICT r09 ask #6): ``lloyd_centroids_v6``'s
+    integer centroids as floats ``c6/1e6 − 1`` — identical IEEE doubles
+    from identical integers in any engine, so the ENTIRE trainer stays
+    DuckDB-twin-able. Raises ``ValueError`` when ``n_cells`` × dims
+    exceeds ``MAX_ARGMIN_LITERALS``; a zero-row input trains no
+    centroids (an empty index)."""
+    return [
+        (cid, [x / 1_000_000.0 - 1.0 for x in c6])
+        for cid, c6 in lloyd_centroids_v6(
+            vectors, n_cells, iters, id_col, vec_col
+        )
+    ]
 
 
 def ivf_assign(
@@ -222,7 +245,10 @@ def ivf_assign(
     dps = vectors.select(
         F.col(id_col),
         F.col(vec_col),
-        *[_dot_lit(vec_col, w).alias(f"_dp{cid}") for cid, w in centroids],
+        *[
+            F.expr(dot_lit_sql(vec_col, w)).alias(f"_dp{cid}")
+            for cid, w in centroids
+        ],
     )
     best_dp: Column | None = None
     best_cid: Column | None = None
@@ -256,7 +282,7 @@ def ivf_probe_cells(
         "array("
         + ", ".join(
             f"named_struct('cid', {int(cid)}, "
-            f"'dp', {_dot_lit_sql(probe_vec, w)})"
+            f"'dp', {dot_lit_sql(probe_vec, w)})"
             for cid, w in centroids
         )
         + ")"

@@ -22,7 +22,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from qa_data_pipeline_rag_llm_spark.functions.hashing import stable_int32
-from qa_data_pipeline_rag_llm_spark.functions.vectors import dot, norm, safe_denom
+from qa_data_pipeline_rag_llm_spark.functions.vectors import (
+    dot,
+    dot_lit_sql,
+    norm,
+    safe_denom,
+)
 
 
 def cosine_topk(
@@ -119,33 +124,14 @@ def srp_signatures(
     if dims is None:
         dims = len(vectors.select(vec_col).first()[0])
     weights = hyperplane_weights(dims, planes)
-    # r12: the whole signature is ONE parsed SQL expression instead of
-    # planes × (per-element F.lit array + two Python lambdas). Each
-    # F.lit/lambda is a py4j round trip, so the old construction cost
-    # ~8.5 s of DRIVER time per call at 32 planes × 64 dims — more than
-    # the queries it feeds spent executing. One F.expr parse is ~10 ms.
-    # The parsed tree is the same Catalyst expression (zip_with +
-    # aggregate fold, repr'd double literals round-trip exactly), so
-    # signatures are bit-identical (A/B'd at sf0.1; oracle unchanged).
-    terms = []
-    for p in range(planes):
-        # float(x)!r, matching ivf._dot_lit_sql (ADVICE r12): a numpy
-        # scalar reprs as 'np.float64(…)' under NumPy 2 and would parse
-        # to NULL/error; float() normalizes without changing the value
-        arr = (
-            "array("
-            + ", ".join(f"CAST('{float(x)!r}' AS DOUBLE)" for x in weights[p])
-            + ")"
-        )
-        proj = (
-            f"aggregate(zip_with(`{vec_col}`, {arr}, "
-            "(x, y) -> CAST(x AS DOUBLE) * y), CAST(0.0 AS DOUBLE), "
-            "(acc, v) -> acc + v)"
-        )
-        terms.append(
-            f"(CASE WHEN {proj} > 0 THEN CAST({2 ** p} AS BIGINT) "
-            "ELSE CAST(0 AS BIGINT) END)"
-        )
+    # the whole signature is ONE parsed SQL expression: per-element
+    # F.lit arrays and Python lambdas cost a py4j round trip each (~8.5 s
+    # of driver time per call at 32 planes × 64 dims; one parse ~10 ms)
+    terms = [
+        f"(CASE WHEN {dot_lit_sql(vec_col, weights[p])} > 0 "
+        f"THEN CAST({2 ** p} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
+        for p in range(planes)
+    ]
     return vectors.select(
         F.col(id_col), F.expr(" + ".join(terms)).alias("sig")
     )

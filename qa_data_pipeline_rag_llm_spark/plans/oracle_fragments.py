@@ -120,3 +120,51 @@ O_SCD2_FULL = """
             IS NULL) AS is_current
     FROM grp
 """
+
+
+def lloyd_ctes(k: int, iters: int) -> str:
+    """operators.ivf.lloyd_centroids_v6 over ``embeddings`` — the body of
+    a ``WITH RECURSIVE`` list defining ``flat`` (vec_id, pos, v6),
+    ``seeds`` (the ``k`` smallest vec_ids) and ``cents`` (cluster, pos,
+    c6, it); the trained centroids are ``cents WHERE it = {iters}``.
+    Same v6 translation, (dist, cluster) tie-break, integer floor
+    average and dropped empty clusters as the Spark loop."""
+    return f"""
+    flat AS (
+      SELECT vec_id,
+             unnest(generate_series(1, len(embedding))) AS pos,
+             CAST(round((CAST(unnest(embedding) AS DOUBLE) + 1.0) * 1000000)
+                  AS BIGINT) AS v6
+      FROM embeddings
+    ), seeds AS (
+      SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT {k}
+    ), cents AS (
+      SELECT CAST(f.vec_id AS INTEGER) AS cluster, f.pos, f.v6 AS c6, 0 AS it
+      FROM flat f JOIN seeds s ON s.vec_id = f.vec_id
+      UNION ALL
+      SELECT asg.cluster, f.pos,
+             CAST(SUM(f.v6) // COUNT(*) AS BIGINT) AS c6,
+             asg.it + 1 AS it
+      FROM (
+        SELECT d.vec_id, d.it,
+               MIN(d.cluster) FILTER (WHERE d.dist = md.min_dist) AS cluster
+        FROM (
+          SELECT f.vec_id, c.cluster, c.it,
+                 SUM((f.v6 - c.c6) * (f.v6 - c.c6)) AS dist
+          FROM flat f JOIN cents c ON c.pos = f.pos
+          GROUP BY f.vec_id, c.cluster, c.it
+        ) d
+        JOIN (
+          SELECT vec_id, MIN(dist) AS min_dist FROM (
+            SELECT f.vec_id, c.cluster,
+                   SUM((f.v6 - c.c6) * (f.v6 - c.c6)) AS dist
+            FROM flat f JOIN cents c ON c.pos = f.pos
+            GROUP BY f.vec_id, c.cluster
+          ) GROUP BY vec_id
+        ) md ON md.vec_id = d.vec_id
+        GROUP BY d.vec_id, d.it
+      ) asg
+      JOIN flat f ON f.vec_id = asg.vec_id
+      WHERE asg.it < {iters}
+      GROUP BY asg.cluster, f.pos, asg.it
+    )"""

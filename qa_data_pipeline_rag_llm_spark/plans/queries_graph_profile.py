@@ -18,6 +18,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from qa_data_pipeline_rag_llm_spark.plans.oracle_fragments import lloyd_ctes
 from qa_data_pipeline_rag_llm_spark.plans.queries import _t, register
 
 PR_ITERS = 5
@@ -124,42 +125,8 @@ KM_ITERS = 3
 @register(
     "kmeans_fixedpoint_embeddings",
     f"""
-    WITH RECURSIVE flat AS (
-      SELECT vec_id,
-             unnest(generate_series(1, len(embedding))) AS pos,
-             CAST(round((CAST(unnest(embedding) AS DOUBLE) + 1.0) * 1000000)
-                  AS BIGINT) AS v6
-      FROM embeddings
-    ), cents AS (
-      SELECT CAST(vec_id AS INTEGER) AS cluster, pos, v6 AS c6, 0 AS it
-      FROM flat WHERE vec_id < {KM_K}
-      UNION ALL
-      SELECT asg.cluster, f.pos,
-             CAST(SUM(f.v6) // COUNT(*) AS BIGINT) AS c6,
-             asg.it + 1 AS it
-      FROM (
-        SELECT d.vec_id, d.it,
-               MIN(d.cluster) FILTER (WHERE d.dist = md.min_dist) AS cluster
-        FROM (
-          SELECT f.vec_id, c.cluster, c.it,
-                 SUM((f.v6 - c.c6) * (f.v6 - c.c6)) AS dist
-          FROM flat f JOIN cents c ON c.pos = f.pos
-          GROUP BY f.vec_id, c.cluster, c.it
-        ) d
-        JOIN (
-          SELECT vec_id, MIN(dist) AS min_dist FROM (
-            SELECT f.vec_id, c.cluster,
-                   SUM((f.v6 - c.c6) * (f.v6 - c.c6)) AS dist
-            FROM flat f JOIN cents c ON c.pos = f.pos
-            GROUP BY f.vec_id, c.cluster
-          ) GROUP BY vec_id
-        ) md ON md.vec_id = d.vec_id
-        GROUP BY d.vec_id, d.it
-      ) asg
-      JOIN flat f ON f.vec_id = asg.vec_id
-      WHERE asg.it < {KM_ITERS}
-      GROUP BY asg.cluster, f.pos, asg.it
-    ), final_cents AS (SELECT cluster, pos, c6 FROM cents WHERE it = {KM_ITERS}),
+    WITH RECURSIVE {lloyd_ctes(KM_K, KM_ITERS)},
+    final_cents AS (SELECT cluster, pos, c6 FROM cents WHERE it = {KM_ITERS}),
     final_dists AS (
       SELECT f.vec_id, c.cluster,
              SUM((f.v6 - c.c6) * (f.v6 - c.c6)) AS dist
@@ -176,69 +143,25 @@ KM_ITERS = 3
     "fixed-point arithmetic: vectors scaled to nonnegative integers "
     "(translation leaves distances unchanged but keeps floor-division "
     "identical across engines — floor vs truncate diverge on negatives), "
-    "squared-L2 as exact integer sums, argmin tie-broken by cluster id, "
-    "centroid update by integer floor-average. Unlike Spark ML KMeans "
-    "(RNG init, float accumulation — kmeans_clusters, rows-only), this "
-    "whole ITERATIVE pipeline hash-matches a DuckDB recursive CTE. "
-    "Per iteration: one pos-join + two shuffles; flat points persisted.",
+    "init = the k smallest vec_ids, squared-L2 as exact integer sums, "
+    "argmin tie-broken by cluster id, centroid update by integer "
+    "floor-average. Unlike Spark ML KMeans (RNG init, float accumulation "
+    "— kmeans_clusters, rows-only), this whole ITERATIVE pipeline "
+    "hash-matches a DuckDB recursive CTE. Runs on the IVF trainer "
+    "(operators/ivf.py lloyd_centroids_v6): per iteration a zero-shuffle "
+    "one-expression argmin plus one map-side-combined groupBy(cluster, "
+    "pos) exchange, k × dims centroids collected to the driver (guarded "
+    "by MAX_ARGMIN_LITERALS); the final assignment is the same argmin "
+    "as a zero-shuffle projection over the input.",
 )
 def kmeans_fixedpoint_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-
-    def flatten(points: DataFrame) -> DataFrame:
-        return points.select(
-            "vec_id", F.posexplode("embedding").alias("pos0", "val")
-        ).select(
-            "vec_id",
-            (F.col("pos0") + 1).alias("pos"),
-            F.round((F.col("val").cast("double") + 1.0) * 1_000_000)
-            .cast("long")
-            .alias("v6"),
-        )
-
-    def assign(points: DataFrame, cents_df: DataFrame) -> DataFrame:
-        dists = (
-            points.join(cents_df, "pos")
-            .groupBy("vec_id", "cluster")
-            .agg(
-                F.sum(
-                    (F.col("v6") - F.col("c6")) * (F.col("v6") - F.col("c6"))
-                ).alias("dist")
-            )
-        )
-        # lexicographic struct-min == (min dist, then min cluster id)
-        return dists.groupBy("vec_id").agg(
-            F.min(F.struct("dist", "cluster")).alias("m")
-        ).select("vec_id", F.col("m.cluster").alias("cluster"))
-
-    flat = flatten(emb).persist()
-    cents = flat.filter(F.col("vec_id") < KM_K).select(
-        F.col("vec_id").cast("int").alias("cluster"), "pos", F.col("v6").alias("c6")
+    from qa_data_pipeline_rag_llm_spark.operators.ivf import (
+        lloyd_assign,
+        lloyd_centroids_v6,
     )
-    try:
-        for _ in range(KM_ITERS):
-            asg = assign(flat, cents)
-            cents = (
-                asg.join(flat, "vec_id")
-                .groupBy("cluster", "pos")
-                .agg(F.expr("sum(v6) div count(*)").cast("long").alias("c6"))
-            )
-        # The final centroids are tiny (k clusters x dims rows): collect
-        # them (the ivf.seed_centroids bounded-collect pattern) and rebuild
-        # the final assignment over FRESH unpersisted lineage from a literal
-        # frame. Returning a localCheckpoint here pinned the checkpoint RDD
-        # for the lifetime of the caller's reference (VERDICT r05 #1) —
-        # nothing inside the query could ever release it.
-        final = sorted(
-            (int(r["cluster"]), int(r["pos"]), int(r["c6"]))
-            for r in cents.collect()
-        )
-        lit_cents = spark.createDataFrame(
-            final, schema="cluster int, pos int, c6 long"
-        )
-        return assign(flatten(emb), F.broadcast(lit_cents))
-    finally:
-        flat.unpersist()
+
+    emb = _t(spark, sf_dir, "embeddings")
+    return lloyd_assign(emb, lloyd_centroids_v6(emb, KM_K, KM_ITERS))
 
 
 _PROFILE_COLS = [

@@ -343,15 +343,18 @@ def bpe_learn_merges_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = words
     try:
         for it in range(1, BPE_K + 1):
-            best = (
+            top = (
                 vocab.select("freq", F.expr(_BPE_TOKS).alias("toks"))
                 .select("freq", F.explode(F.expr(_BPE_PAIRS_SPARK)).alias("p"))
                 .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
                 .agg(F.sum("freq").alias("cnt"))
                 .orderBy(F.desc("cnt"), "a", "b")
                 .limit(1)
-                .collect()[0]
+                .collect()
             )
+            if not top:  # no symbol pair left: keep the merges learned so far
+                break
+            best = top[0]
             a, b = best["a"], best["b"]
             # symbols are [a-z_]+ by construction — safe to splice into
             # the replace() literal (and fail loud if that ever changes)

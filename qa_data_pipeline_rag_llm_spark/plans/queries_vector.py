@@ -29,6 +29,7 @@ from qa_data_pipeline_rag_llm_spark.operators.similarity import (
     hyperplane_weights,
     srp_signatures,
 )
+from qa_data_pipeline_rag_llm_spark.plans.oracle_fragments import lloyd_ctes
 from qa_data_pipeline_rag_llm_spark.plans.queries import _t, register
 
 DIMS = 64          # driver testdata embedding width (TESTDATA profile)
@@ -688,44 +689,7 @@ def ann_recall_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _R3["ann_recall_ivf_trained"].oracle = f"""
-    WITH RECURSIVE flat AS (
-      SELECT vec_id,
-             unnest(generate_series(1, len(embedding))) AS pos,
-             CAST(round((CAST(unnest(embedding) AS DOUBLE) + 1.0) * 1000000)
-                  AS BIGINT) AS v6
-      FROM embeddings
-    ), seeds AS (
-      SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT {N_CELLS}
-    ), cents AS (
-      SELECT CAST(f.vec_id AS INTEGER) AS cluster, f.pos, f.v6 AS c6, 0 AS it
-      FROM flat f JOIN seeds s ON s.vec_id = f.vec_id
-      UNION ALL
-      SELECT asg.cluster, f.pos,
-             CAST(SUM(f.v6) // COUNT(*) AS BIGINT) AS c6,
-             asg.it + 1 AS it
-      FROM (
-        SELECT d.vec_id, d.it,
-               MIN(d.cluster) FILTER (WHERE d.dist = md.min_dist) AS cluster
-        FROM (
-          SELECT f.vec_id, c.cluster, c.it,
-                 SUM((f.v6 - c.c6) * (f.v6 - c.c6)) AS dist
-          FROM flat f JOIN cents c ON c.pos = f.pos
-          GROUP BY f.vec_id, c.cluster, c.it
-        ) d
-        JOIN (
-          SELECT vec_id, MIN(dist) AS min_dist FROM (
-            SELECT f.vec_id, c.cluster,
-                   SUM((f.v6 - c.c6) * (f.v6 - c.c6)) AS dist
-            FROM flat f JOIN cents c ON c.pos = f.pos
-            GROUP BY f.vec_id, c.cluster
-          ) GROUP BY vec_id
-        ) md ON md.vec_id = d.vec_id
-        GROUP BY d.vec_id, d.it
-      ) asg
-      JOIN flat f ON f.vec_id = asg.vec_id
-      WHERE asg.it < {TRAIN_ITERS}
-      GROUP BY asg.cluster, f.pos, asg.it
-    ), tcent AS (
+    WITH RECURSIVE {lloyd_ctes(N_CELLS, TRAIN_ITERS)}, tcent AS (
       SELECT cluster AS cid,
              list(CAST(c6 AS DOUBLE) / 1000000.0 - 1.0 ORDER BY pos) AS cvec
       FROM cents WHERE it = {TRAIN_ITERS} GROUP BY cluster

@@ -25,7 +25,7 @@ from typing import Iterator, Tuple
 
 import pandas as pd
 from pyspark import cloudpickle
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -644,6 +644,82 @@ def stream_user_type_profile(
     )
 
 
+# same-user purchase in the 30 minutes after a click; with the 2-hour
+# watermarks on both sides this range bounds the join state Spark keeps
+_CLICK_PURCHASE_WINDOW = """
+    c_user_id = p_user_id AND
+    purchase_ts > click_ts AND
+    purchase_ts <= click_ts + INTERVAL 30 MINUTES
+"""
+
+
+def _click_purchase_streams(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The two watermarked sides of the click → purchase joins: clicks
+    ``(c_user_id, click_ts, click_id)`` and purchases ``(p_user_id,
+    purchase_ts, purchase_id, purchase_value)``, each behind a 2-hour
+    watermark. Join them on ``_CLICK_PURCHASE_WINDOW``."""
+    clicks = (
+        read_events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "click")
+        .select(
+            F.col("user_id").alias("c_user_id"),
+            F.col("ts").alias("click_ts"),
+            F.col("event_id").alias("click_id"),
+        )
+        .withWatermark("click_ts", "2 hours")
+    )
+    purchases = (
+        read_events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("user_id").alias("p_user_id"),
+            F.col("ts").alias("purchase_ts"),
+            F.col("event_id").alias("purchase_id"),
+            F.col("value").alias("purchase_value"),
+        )
+        .withWatermark("purchase_ts", "2 hours")
+    )
+    return clicks, purchases
+
+
+def _run_click_purchase_join(
+    spark: SparkSession, sf_dir: str, how: str, *cols: str | Column
+) -> DataFrame:
+    """``how`` join of the two sides on the 30-minute window, projected
+    to ``cols`` and run to completion in append mode."""
+    clicks, purchases = _click_purchase_streams(spark, sf_dir)
+    joined = clicks.join(
+        purchases, F.expr(_CLICK_PURCHASE_WINDOW), how
+    ).select(*cols)
+    return run_to_completion(
+        joined, "append", state_partitions_for_input(spark, sf_dir, tables=("events",))
+    )
+
+
+def _with_final_watermark(
+    out: DataFrame, spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """``out`` plus ``__wm``: where the global watermark ends under
+    ``Trigger.AvailableNow`` — ``min(max(click_ts), max(purchase_ts)) −
+    2h`` — computed in-plan from the batch table as a broadcast 1-row
+    frame, no driver action."""
+    from qa_data_pipeline_rag_llm_spark.catalog import load_table
+
+    ev = load_table(spark, sf_dir, "events")
+    horizon = ev.agg(
+        (
+            F.least(
+                F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
+                F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
+            )
+            - F.expr("INTERVAL 2 HOURS")
+        ).alias("__wm")
+    )
+    return out.crossJoin(F.broadcast(horizon))
+
+
 def stream_stream_click_purchase_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream LEFT OUTER join, restricted to its deterministic
     subset (VERDICT r01 #6).
@@ -664,59 +740,20 @@ def stream_stream_click_purchase_left(spark: SparkSession, sf_dir: str) -> DataF
     boundary artifact. This operator therefore filters BOTH the streamed
     result and its oracle to the provably-final subset — matched rows
     (which emit on arrival, deterministically) plus NULL rows strictly
-    below the final-watermark horizon — computed in-plan from the batch
-    table as a broadcast 1-row frame, no driver action.
+    below the final-watermark horizon.
     """
-    clicks = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            "user_id",
-            F.col("ts").alias("click_ts"),
-            F.col("event_id").alias("click_id"),
-        )
-        .withWatermark("click_ts", "2 hours")
-    )
-    purchases = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            """
-            user_id = p_user_id AND
-            purchase_ts > click_ts AND
-            purchase_ts <= click_ts + INTERVAL 30 MINUTES
-            """
-        ),
+    out = _run_click_purchase_join(
+        spark,
+        sf_dir,
         "left_outer",
-    ).select("user_id", "click_id", "click_ts", "purchase_id", "purchase_value")
-    out = run_to_completion(
-        joined, "append", state_partitions_for_input(spark, sf_dir, tables=("events",))
-    )
-
-    from qa_data_pipeline_rag_llm_spark.catalog import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    horizon = ev.agg(
-        (
-            F.least(
-                F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
-                F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
-            )
-            - F.expr("INTERVAL 2 HOURS")
-        ).alias("__wm")
+        F.col("c_user_id").alias("user_id"),
+        "click_id",
+        "click_ts",
+        "purchase_id",
+        "purchase_value",
     )
     return (
-        out.crossJoin(F.broadcast(horizon))
+        _with_final_watermark(out, spark, sf_dir)
         .filter(
             F.col("purchase_id").isNotNull()
             | (F.col("click_ts") + F.expr("INTERVAL 30 MINUTES") < F.col("__wm"))
@@ -734,64 +771,21 @@ def stream_stream_click_purchase_full(spark: SparkSession, sf_dir: str) -> DataF
     windows strictly below the final-watermark horizon. A purchase's join
     window is the 30 minutes BEFORE it, so its horizon bound is its own
     timestamp."""
-    clicks = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-            F.col("event_id").alias("click_id"),
-        )
-        .withWatermark("click_ts", "2 hours")
-    )
-    purchases = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("event_id").alias("purchase_id"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            """
-            c_user_id = p_user_id AND
-            purchase_ts > click_ts AND
-            purchase_ts <= click_ts + INTERVAL 30 MINUTES
-            """
-        ),
+    out = _run_click_purchase_join(
+        spark,
+        sf_dir,
         "full_outer",
-    ).select(
         F.coalesce("c_user_id", "p_user_id").alias("user_id"),
         "click_id",
         "click_ts",
         "purchase_id",
         "purchase_ts",
     )
-    out = run_to_completion(
-        joined, "append", state_partitions_for_input(spark, sf_dir, tables=("events",))
-    )
-
-    from qa_data_pipeline_rag_llm_spark.catalog import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    horizon = ev.agg(
-        (
-            F.least(
-                F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
-                F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
-            )
-            - F.expr("INTERVAL 2 HOURS")
-        ).alias("__wm")
-    )
     matched = F.col("click_id").isNotNull() & F.col("purchase_id").isNotNull()
     click_final = F.col("click_ts") + F.expr("INTERVAL 30 MINUTES") < F.col("__wm")
     purchase_final = F.col("purchase_ts") < F.col("__wm")
     return (
-        out.crossJoin(F.broadcast(horizon))
+        _with_final_watermark(out, spark, sf_dir)
         .filter(
             matched
             | (F.col("purchase_id").isNull() & click_final)
@@ -807,48 +801,14 @@ def stream_stream_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     emit as soon as both sides arrive; the two watermarks plus the
     time-range predicate bound the join state Spark must retain (without
     them, both sides buffer forever at 100 TB/day)."""
-    clicks = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            "user_id",
-            F.col("ts").alias("click_ts"),
-            F.col("event_id").alias("click_id"),
-        )
-        .withWatermark("click_ts", "2 hours")
-    )
-    purchases = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    joined = (
-        clicks.alias("c")
-        .join(
-            purchases.alias("p"),
-            F.expr(
-                """
-                c.user_id = p.user_id AND
-                purchase_ts > click_ts AND
-                purchase_ts <= click_ts + INTERVAL 30 MINUTES
-                """
-            ),
-        )
-        .select(
-            F.col("c.user_id").alias("user_id"),
-            "click_id",
-            "purchase_id",
-            "purchase_value",
-        )
-    )
-    return run_to_completion(
-        joined, "append", state_partitions_for_input(spark, sf_dir, tables=("events",))
+    return _run_click_purchase_join(
+        spark,
+        sf_dir,
+        "inner",
+        F.col("c_user_id").alias("user_id"),
+        "click_id",
+        "purchase_id",
+        "purchase_value",
     )
 
 

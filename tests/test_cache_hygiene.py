@@ -1,7 +1,7 @@
 """No registry query may leak cached blocks into a long-lived session
 (VERDICT r02 #9): a lazily-returned DataFrame can never unpersist, so
 persist() is only legal inside a query when a try/finally releases it
-before return (pagerank/kmeans do this around localCheckpoint)."""
+before return (pagerank does this around localCheckpoint)."""
 
 from __future__ import annotations
 

@@ -24,3 +24,30 @@ def test_runs_without_oracle(name, spark, tables):
     df = spec.spark(spark, SF_DIR)
     assert df.columns
     assert df.count() >= 0
+
+
+@pytest.mark.parametrize(
+    "name,table",
+    [
+        ("bpe_learn_merges_documents", "documents"),
+        ("kmeans_fixedpoint_embeddings", "embeddings"),
+    ],
+)
+def test_iterative_query_zero_rows_matches_oracle(name, table, spark, tmp_path):
+    """An iterative query over a zero-row input table returns zero rows,
+    as its DuckDB recursive CTE does — no crash on an empty first round."""
+    import duckdb
+
+    path = tmp_path / f"{table}.parquet"
+    con = duckdb.connect()
+    try:
+        con.sql(
+            f"COPY (SELECT * FROM '{SF_DIR}/{table}.parquet' LIMIT 0) "
+            f"TO '{path}' (FORMAT parquet)"
+        )
+        con.sql(f"CREATE VIEW {table} AS SELECT * FROM '{path}'")
+        got = REGISTRY[name].spark(spark, str(tmp_path))
+        assert got.count() == 0
+        assert_oracle_match(got, con.sql(REGISTRY[name].oracle), name)
+    finally:
+        con.close()

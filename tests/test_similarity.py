@@ -274,6 +274,60 @@ def test_lloyd_trainer_zero_rows_returns_no_centroids(spark, tables):
     assert train_centroids_lloyd(emb, n_cells=8, iters=3) == []
 
 
+def test_lit_array_sql_round_trips_exactly(spark):
+    """The literal-array formatter parses back to the exact values it was
+    given: doubles bit-for-bit (subnormals, NumPy scalars included) and
+    ints beyond 2^53 without a detour through double."""
+    import struct
+
+    import numpy as np
+
+    from qa_data_pipeline_rag_llm_spark.functions.vectors import lit_array_sql
+
+    # np.float32(0.1) reprs as '0.1' but holds 0.10000000149011612
+    doubles = [
+        0.1, 1 / 3, -1e-300, 2**-1074, np.float64(-2.5e-17), np.float32(0.1)
+    ]
+    ints = [2**62 + 1, np.int64(-(2**53) - 1)]
+    row = (
+        spark.range(1)
+        .select(
+            F.expr(lit_array_sql(doubles)).alias("d"),
+            F.expr(lit_array_sql(ints)).alias("i"),
+        )
+        .collect()[0]
+    )
+
+    def bits(x):
+        return struct.pack("<d", float(x))
+
+    assert [bits(x) for x in row["d"]] == [bits(x) for x in doubles]
+    assert row["i"] == [int(x) for x in ints]
+
+
+def test_argmin_literal_bound_raises_before_expression(spark):
+    """Above MAX_ARGMIN_LITERALS (k × dims) the trainer raises a clear
+    ValueError instead of parsing a ~1 MB expression into every row."""
+    import pytest
+
+    from qa_data_pipeline_rag_llm_spark.operators.ivf import (
+        MAX_ARGMIN_LITERALS,
+        argmin_sql,
+        train_centroids_lloyd,
+    )
+
+    dims = 40_000
+    assert 2 * dims > MAX_ARGMIN_LITERALS
+    with pytest.raises(ValueError, match="MAX_ARGMIN_LITERALS"):
+        argmin_sql([(0, [0] * dims), (1, [1] * dims)])
+    wide = spark.createDataFrame(
+        [(0, [0.0] * dims), (1, [0.5] * dims)],
+        "vec_id bigint, embedding array<float>",
+    )
+    with pytest.raises(ValueError, match="MAX_ARGMIN_LITERALS"):
+        train_centroids_lloyd(wide, n_cells=2, iters=1)
+
+
 def test_dot_norm_name_path_bit_identical(spark, tables):
     """r13: dot/norm built from column NAMES parse to the same Catalyst
     expression as the Column-lambda twins — results must be bit-identical
