@@ -30,7 +30,7 @@ run records, summed over the queries both this and the previous
 artifact recorded, rose in ``build_jobs`` or ``exchanges``, or in
 ``shuffle_write_mb`` / ``spill_mb`` by more than ``MB_MARGIN``. Only
 artifacts at the same ``sf`` and core count are compared; without one
-(or without records) the key is absent. Execution ``jobs``, ``stages``
+(or without records) the key is printed as null. Execution ``jobs``, ``stages``
 and ``tasks`` are recorded but not gated (see ``GATED_COUNTS``); seconds
 stay in the artifact as information.
 
@@ -254,6 +254,17 @@ def family_regressions(art: dict, prev: dict | None) -> list[str] | None:
     return sorted(flagged)
 
 
+def record_family_gate(art: dict, prev: tuple[str, dict] | None) -> None:
+    """Put the family gate into ``art``: ``registry_family_regressions``
+    always (null when nothing was comparable, so a run at another sf or
+    core count says so instead of dropping the key), and
+    ``prev_bench_artifact`` when a comparison was made."""
+    flags = family_regressions(art, prev[1] if prev else None)
+    art["registry_family_regressions"] = flags
+    if flags is not None:
+        art["prev_bench_artifact"] = prev[0]
+
+
 def _round_num(name: str) -> int:
     m = re.search(r"_r(\d+)\.json$", name)
     return int(m.group(1)) if m else -1
@@ -376,10 +387,7 @@ def main() -> None:
     if os.environ.get("SPARK_GRAFT_REGISTRY_SWEEP", "1") != "0":
         art.update(registry_sweep(spark, meter, sf_dir))
     prev = _prev_artifact(ROOT, sf)
-    flags = family_regressions(art, prev[1] if prev else None)
-    if flags is not None:
-        art["prev_bench_artifact"] = prev[0]
-        art["registry_family_regressions"] = flags
+    record_family_gate(art, prev)
     detail = detail_name(sf, _current_round(ROOT))
     (ROOT / detail).write_text(json.dumps(art, indent=1))
     print(compact_line(art, detail))

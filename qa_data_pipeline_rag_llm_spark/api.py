@@ -41,7 +41,9 @@ from qa_data_pipeline_rag_llm_spark.operators.normalize import (  # noqa: F401
 from qa_data_pipeline_rag_llm_spark.operators.ranking import (  # noqa: F401
     top_k_per_group,
 )
-from qa_data_pipeline_rag_llm_spark.operators.similarity import cosine_topk
+from qa_data_pipeline_rag_llm_spark.operators.similarity import (
+    cosine_topk_one_probe,
+)
 
 
 def embed_corpus(
@@ -64,17 +66,21 @@ def retrieve(
 ) -> DataFrame:
     """Parameterized similarity retrieval (S7/M4): exact cosine top-k of an
     ARBITRARY query vector against the corpus, thresholded — app2.py:32-45
-    without the fixed probe the registry demo uses. The query vector rides
-    as a literal array (broadcast by construction, no driver math)."""
+    without the fixed probe the registry demo uses. Returns (id, sim,
+    rank), ranked by sim desc then id, the rows and ranks of the
+    registry's ``cosine_topk``. The query vector rides as a one-row
+    broadcast probe, and a single probe ranks with one ordered take
+    (``similarity.cosine_topk_one_probe``), not the multi-probe
+    two-shuffle top-k."""
     spark = vectors.sparkSession
-    # probe_id = -1: cosine_topk excludes id collisions (self-match when
-    # probing with a corpus row); an external query vector must exclude
-    # nothing, and corpus ids are non-negative
+    # probe_id = -1: the scoring step excludes id collisions (self-match
+    # when probing with a corpus row); an external query vector must
+    # exclude nothing, and corpus ids are non-negative
     probe = spark.createDataFrame(
         [(-1, [float(x) for x in query_vector])],
         "probe_id int, probe_vec array<double>",
     )
-    out = cosine_topk(vectors, probe, k=k, id_col=id_col, vec_col=vec_col)
+    out = cosine_topk_one_probe(vectors, probe, k=k, id_col=id_col, vec_col=vec_col)
     return out.filter(F.col("sim") >= threshold).drop("probe_id")
 
 
@@ -91,8 +97,10 @@ def ask(
     with a fresh question embedding is the classic serving bug) →
     cosine top-k ≥ threshold → join context docs → rank-ordered
     grounded prompt → batched generation. Returns (n_docs,
-    prompt_chars, answer). For a pre-computed index from the SAME
-    backend, use :func:`retrieve` + your own prompt assembly."""
+    prompt_chars, answer). The question is the one probe, so the top-k
+    is one ordered take, as in :func:`retrieve`. The corpus is embedded
+    on every call; for a pre-computed index from the SAME backend, use
+    :func:`retrieve` + your own prompt assembly."""
     from qa_data_pipeline_rag_llm_spark.functions.embed import embed_text
     from qa_data_pipeline_rag_llm_spark.functions.llm import generate_text
 
@@ -103,7 +111,7 @@ def ask(
         F.lit(-1).alias("probe_id"), embed_text(F.col("q")).alias("probe_vec")
     )
     top = (
-        cosine_topk(vectors, q, k=k)
+        cosine_topk_one_probe(vectors, q, k=k)
         .filter(F.col("sim") >= threshold)
         .select("vec_id", "rank")
     )
@@ -234,9 +242,15 @@ def curate(
     ``id_col`` must uniquely identify rows and be totally ordered (the
     survivor choice needs a deterministic order); ``validate=True``
     fail-louds on duplicate ids via the dedup family's contract guard.
-    Scale shape: one corpus pass for the rule gate (pure projection),
-    the banded near-dup pipeline (never O(n²)), two-star components in
-    O(log n) rounds on the pair graph, and 1:1 doc_id joins.
+    Scale shape: the (doc_id, text) projection is materialized ONCE
+    (an eager ``localCheckpoint``) and read five times — the unique-id
+    guard (with ``validate``), the MinHash signatures, the shingle sets,
+    the rule gate (pure projection) and the cluster join — so the
+    caller's lineage (a CSV read, windows, joins) runs once, not five
+    times. Then the banded
+    near-dup pipeline (never O(n²)), two-star components on the pair
+    graph (on the driver below ``graph.LOCAL_FINISH_ROWS`` edges, else
+    O(log n) rounds), and 1:1 doc_id joins.
     """
     # anchor on the canonical registry module FIRST: entering the plans
     # package through queries_curation leaves it mid-import when
@@ -255,7 +269,7 @@ def curate(
 
     base = df.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    )
+    ).localCheckpoint(eager=True)
     rules = gopher_verdict(base).select(
         "doc_id", F.col("keep").alias("rule_keep")
     )

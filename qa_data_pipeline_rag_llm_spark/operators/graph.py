@@ -8,6 +8,14 @@ in its neighborhood until fixpoint, converging in O(graph diameter)
 rounds. Near-dup graphs are unions of small dense blobs, so the
 diameter — and the round count — is tiny regardless of corpus size.
 
+Small graphs finish on the driver: both operators checkpoint their
+canonical edge frame once, take at most ``LOCAL_FINISH_ROWS`` + 1 of
+its rows in one collect, and when the whole frame fits run union-find
+there (root = minimum id, so labels are the rounds' labels by
+construction) — every round pays Spark's fixed per-job cost however few
+edges are left, and a near-dup pair graph is often a few dozen edges.
+The distributed rounds below run only above the bound.
+
 Scale notes: the symmetrized edge list is checkpointed once and reused
 every round; labels are re-checkpointed per round so lineage stays O(1)
 instead of growing by one join per iteration (the classic iterative-
@@ -21,6 +29,57 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+# Edge rows at or below which a graph finishes on the driver (a bound,
+# not an option: 10^5 id pairs are a few MB of driver memory).
+LOCAL_FINISH_ROWS = 100_000
+
+
+def _finish_locally(e: DataFrame, a: str, b: str) -> DataFrame | None:
+    """(id, label) of the edge frame ``e`` by union-find on the driver,
+    or None when ``e`` holds more than ``LOCAL_FINISH_ROWS`` rows (one
+    bounded collect decides). Every endpoint is a vertex; label = the
+    minimum id of its component, the fixpoint both distributed loops
+    reach. A NULL endpoint is a vertex labelled NULL that joins nothing
+    (a NULL never equals in the rounds' joins either). Ids compare as
+    Python values, which order ints and strings as Spark's ``min``
+    does. Both columns are typed like the edge columns."""
+    rows = e.limit(LOCAL_FINISH_ROWS + 1).collect()
+    if len(rows) > LOCAL_FINISH_ROWS:
+        return None
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for x, y in ((r[a], r[b]) for r in rows):
+        parent.setdefault(x, x)
+        parent.setdefault(y, y)
+        if x is not None and y is not None:
+            rx, ry = find(x), find(y)
+            if rx != ry:
+                parent[max(rx, ry)] = min(rx, ry)
+    # an Arrow table becomes a LocalTableScan: no Python worker task
+    # re-serializes the rows each time the labels are scanned
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    dtype = e.schema[a].dataType
+    t = to_arrow_type(dtype)
+    ids = list(parent)
+    return e.sparkSession.createDataFrame(
+        pa.table(
+            {
+                "id": pa.array(ids, type=t),
+                "label": pa.array([find(v) for v in ids], type=t),
+            }
+        ),
+        StructType([StructField("id", dtype), StructField("label", dtype)]),
+    )
 
 
 def connected_components(
@@ -31,10 +90,14 @@ def connected_components(
 ) -> DataFrame:
     """(src, dst) undirected edges → (id, label) with label = min vertex
     id reachable. Only vertices present in edges appear; callers join
-    isolated vertices back with label = own id."""
+    isolated vertices back with label = own id. At most
+    ``LOCAL_FINISH_ROWS`` symmetrized edges finish on the driver."""
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     e = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
     e = e.localCheckpoint(eager=True)  # scanned every round — cut lineage once
+    local = _finish_locally(e, "a", "b")
+    if local is not None:
+        return local
     labels = (
         e.select(F.col("a").alias("id")).distinct().withColumn("label", F.col("id"))
     )
@@ -164,6 +227,9 @@ def connected_components_twostar(
     Same contract as connected_components: only vertices present in the
     input appear; label = component minimum.
 
+    At most ``LOCAL_FINISH_ROWS`` canonical edges finish on the driver
+    (module docstring); the rounds below run only above that bound.
+
     Convergence detection: a (count, xor-of-pair-hashes) signature of
     the canonical directed edge set — two scalar aggregates, no
     driver-side edge materialization. Signature-based detection needs
@@ -188,6 +254,9 @@ def connected_components_twostar(
         .distinct()
         .localCheckpoint(eager=True)
     )
+    local = _finish_locally(e, "u", "v")
+    if local is not None:
+        return local
     # verts is consumed exactly once (the final label join) and derives
     # from the checkpointed e, so eagerly checkpointing it was one whole
     # wasted job per call (r13; it predated the entry checkpoint of e).

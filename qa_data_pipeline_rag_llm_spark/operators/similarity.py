@@ -30,41 +30,31 @@ from qa_data_pipeline_rag_llm_spark.functions.vectors import (
 )
 
 
-def cosine_topk(
+def cosine_scores(
     vectors: DataFrame,
     probes: DataFrame,
-    k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     probe_id: str = "probe_id",
     probe_vec: str = "probe_vec",
-    num_salts: int = 16,
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for every probe row.
+    """(probe_id, id, sim) for every probe × vector pair, id collisions
+    excluded (a corpus row probing the corpus never matches itself) —
+    the scoring step both top-k rankings below share.
 
     ``probes`` is expected to be small — it is broadcast, so the candidate
-    scan never shuffles; only the per-probe top-k rank does.
+    scan never shuffles.
 
     Norms are folded ONCE per side before the pair join (higher-order
     functions are interpreted, not codegen'd — per-pair norm folds were
     the dominant cost); the double result is bit-identical because the
     fold itself is unchanged, only its multiplicity.
-
-    The per-probe rank runs as ``operators/ranking.salted_top_k``
-    (review r03): a window partitioned by probe_id alone serializes the
-    WHOLE candidate frame through one task per probe — with a single
-    probe that is the corpus-sized single-partition window of VERDICT
-    r02 #1. The two-phase form is value-identical.
     """
-    from qa_data_pipeline_rag_llm_spark.operators.ranking import (
-        salted_top_k,
-    )
-
     # name-path dot/norm (r13): one parsed expression per fold instead of
     # py4j lambda construction — bit-identical results, see functions/vectors
     v = vectors.withColumn("_vn", norm(vec_col))
     p = probes.withColumn("_pn", norm(probe_vec))
-    scored = v.join(F.broadcast(p)).filter(
+    return v.join(F.broadcast(p)).filter(
         F.col(id_col) != F.col(probe_id)
     ).select(
         F.col(probe_id),
@@ -75,6 +65,33 @@ def cosine_topk(
             6,
         ).alias("sim"),
     )
+
+
+def cosine_topk(
+    vectors: DataFrame,
+    probes: DataFrame,
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    probe_id: str = "probe_id",
+    probe_vec: str = "probe_vec",
+    num_salts: int = 16,
+) -> DataFrame:
+    """Exact top-k cosine neighbors for every probe row: (probe_id, id,
+    sim, rank), ordered by sim desc then id.
+
+    The per-probe rank runs as ``operators/ranking.salted_top_k``
+    (review r03): a window partitioned by probe_id alone serializes the
+    WHOLE candidate frame through one task per probe — with a single
+    probe that is the corpus-sized single-partition window of VERDICT
+    r02 #1. The two-phase form is value-identical. A caller that holds
+    exactly one probe ranks with :func:`cosine_topk_one_probe` instead.
+    """
+    from qa_data_pipeline_rag_llm_spark.operators.ranking import (
+        salted_top_k,
+    )
+
+    scored = cosine_scores(vectors, probes, id_col, vec_col, probe_id, probe_vec)
     return salted_top_k(
         scored,
         [probe_id],
@@ -83,6 +100,37 @@ def cosine_topk(
         salt_col=id_col,
         num_salts=num_salts,
     ).select(probe_id, id_col, "sim", "rank")
+
+
+def cosine_topk_one_probe(
+    vectors: DataFrame,
+    probe: DataFrame,
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    probe_id: str = "probe_id",
+    probe_vec: str = "probe_vec",
+) -> DataFrame:
+    """:func:`cosine_topk` for a ``probe`` frame of exactly ONE row: same
+    rows, same tie-break, same ``rank``.
+
+    With one probe the per-probe top-k is a global one, so it is one
+    ordered take (``orderBy(sim desc, id).limit(k)``, Spark's
+    TakeOrdered: a local top-k per partition, then a merge of ≤ k rows a
+    partition) and the rank is a row number over the ≤ k survivors — no
+    window over the candidates and none of ``salted_top_k``'s two
+    shuffles. With several probes the take would rank them together;
+    that is ``cosine_topk``'s job."""
+    order = [F.desc("sim"), F.col(id_col)]
+    return (
+        cosine_scores(vectors, probe, id_col, vec_col, probe_id, probe_vec)
+        .orderBy(*order)
+        .limit(k)
+        .withColumn(
+            "rank", F.row_number().over(Window.partitionBy(probe_id).orderBy(*order))
+        )
+        .select(probe_id, id_col, "sim", "rank")
+    )
 
 
 def hyperplane_weights(dims: int, planes: int) -> list[list[float]]:

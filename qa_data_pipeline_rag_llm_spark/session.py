@@ -23,7 +23,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# local[N] task threads: the CPUs this process may run on, unless
+# SPARK_GRAFT_CPUS says otherwise
+DEFAULT_CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+)
 
 
 def get_spark(

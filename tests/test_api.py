@@ -213,3 +213,70 @@ def test_curate_validate_rejects_duplicate_ids(spark):
     )
     with pytest.raises(ValueError, match="duplicate rows"):
         api.curate(df)
+
+
+
+def _multi_probe_ranker(vectors, probe, k=5, **cols):
+    """The registry's multi-probe ``cosine_topk`` behind the one-probe
+    ranker's signature: the reference the one ordered take must match."""
+    from qa_data_pipeline_rag_llm_spark.operators.similarity import cosine_topk
+
+    return cosine_topk(vectors, probe, k=k, **cols)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+# three vectors share the probe's direction (planted equal sims, ids out
+# of order); the rest sit at 45, 90 and ~169 degrees
+_PLANTED = [(9, [1.0, 0.0]), (3, [1.0, 0.0]), (6, [1.0, 0.0]),
+            (4, [1.0, 1.0]), (1, [0.0, 1.0]), (8, [-1.0, 0.2])]
+_CASES = {
+    # name: (corpus, k, threshold, ids in rank order)
+    "ties": (_PLANTED, 2, 0.0, [3, 6]),
+    "k_over_corpus": (_PLANTED, 50, -1.0, [3, 6, 9, 4, 1, 8]),
+    "threshold": (_PLANTED, 5, 0.7, [3, 6, 9, 4]),
+    "zero_rows": ([], 3, 0.0, []),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_CASES))
+def test_retrieve_one_probe_take_matches_cosine_topk(spark, monkeypatch, case):
+    """retrieve ranks its one probe with one ordered take: the same rows,
+    sims and ranks as the multi-probe salted top-k."""
+    corpus, k, threshold, ids = _CASES[case]
+    vectors = spark.createDataFrame(corpus, "vec_id long, embedding array<float>")
+    got = _rows(api.retrieve(vectors, [1.0, 0.0], k=k, threshold=threshold))
+    monkeypatch.setattr(api, "cosine_topk_one_probe", _multi_probe_ranker)
+    want = _rows(api.retrieve(vectors, [1.0, 0.0], k=k, threshold=threshold))
+    assert got == want
+    by_rank = sorted(got, key=lambda r: r[2])
+    assert [r[0] for r in by_rank] == ids
+    assert [r[2] for r in by_rank] == list(range(1, len(ids) + 1))
+
+
+_QUESTION = "how do spark joins work?"
+# a duplicated text embeds identically (planted equal sims); under the
+# fake hash embedder only the question's own text clears a high threshold
+_DOCS = [(7, _QUESTION), (2, _QUESTION), (5, _QUESTION),
+         (4, "parquet files and column pruning"), (1, "window functions"),
+         (3, "broadcast joins in spark")]
+_ASK_CASES = {
+    # name: (documents, k, threshold, n_docs)
+    "ties": (_DOCS, 2, 0.0, 2),
+    "k_over_corpus": (_DOCS, 50, -1.0, 6),
+    "threshold": (_DOCS, 5, 0.9, 3),
+    "zero_rows": ([], 3, 0.0, 0),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_ASK_CASES))
+def test_ask_one_probe_take_matches_cosine_topk(spark, monkeypatch, case):
+    docs, k, threshold, n_docs = _ASK_CASES[case]
+    documents = spark.createDataFrame(docs, "doc_id long, text string")
+    got = _rows(api.ask(spark, _QUESTION, documents, k=k, threshold=threshold))
+    monkeypatch.setattr(api, "cosine_topk_one_probe", _multi_probe_ranker)
+    want = _rows(api.ask(spark, _QUESTION, documents, k=k, threshold=threshold))
+    assert got == want
+    assert got[0][0] == n_docs

@@ -227,6 +227,51 @@ def test_family_regression_needs_same_sf_and_cores():
     assert b.family_regressions(_art(worse, cores=4), prev) is None
 
 
+def test_family_gate_key_printed_as_null_without_comparison():
+    """A run at another core count (or with no previous artifact) prints
+    ``registry_family_regressions: null`` instead of dropping the key."""
+    b = _bench()
+    prev = ("BENCH_FULL_sf0.1.json", _art({"fam": {"q": _rec()}}))
+    for other in (None, prev):
+        art = _art({"fam": {"q": _rec(exchanges=5)}}, cores=4)
+        b.record_family_gate(art, other)
+        line = json.loads(b.compact_line(art, "BENCH_FULL_sf0.1.json"))
+        assert "registry_family_regressions" in line
+        assert line["registry_family_regressions"] is None
+        assert "prev_bench_artifact" not in line
+    art = _art({"fam": {"q": _rec(exchanges=5)}})
+    b.record_family_gate(art, prev)
+    line = json.loads(b.compact_line(art, "BENCH_FULL_sf0.1.json"))
+    assert line["registry_family_regressions"] == ["fam"]
+    assert line["prev_bench_artifact"] == prev[0]
+
+
+def test_default_cpus_follow_host_unless_overridden():
+    """``local[N]`` defaults to the CPUs this process may run on, so a
+    bench run without SPARK_GRAFT_CPUS compares against a same-host
+    artifact; the variable still overrides it."""
+    import os
+    import subprocess
+
+    code = (
+        "import os\n"
+        "from qa_data_pipeline_rag_llm_spark import session\n"
+        "print(session.DEFAULT_CPUS, len(os.sched_getaffinity(0)))\n"
+    )
+
+    def cpus(**env) -> list[int]:
+        base = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+        out = subprocess.run(
+            [sys.executable, "-c", code], cwd=ROOT, env={**base, **env},
+            capture_output=True, text=True, check=True,
+        ).stdout.split()
+        return [int(x) for x in out]
+
+    default, host = cpus()
+    assert default == host
+    assert cpus(SPARK_GRAFT_CPUS="3")[0] == 3
+
+
 def test_run_record_counts_extra_exchange(spark):
     """A frame with an extra ``repartition`` records exactly one more
     exchange than its twin."""

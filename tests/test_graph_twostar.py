@@ -1,18 +1,33 @@
 """Two-star connected components (operators/graph.py) vs min-label
 propagation: identical labels on adversarial topologies, including the
 long chains where propagation needs O(diameter) rounds and two-star
-needs O(log n)."""
+needs O(log n).
+
+Both operators finish graphs of at most ``graph.LOCAL_FINISH_ROWS``
+edges on the driver, so every test here lowers that bound below any
+row count (an empty frame's included) to exercise the distributed
+rounds; the parity tests at the end compare the two paths."""
 
 from __future__ import annotations
 
 import random
+from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
+from qa_data_pipeline_rag_llm_spark.operators import graph
 from qa_data_pipeline_rag_llm_spark.operators.graph import (
     connected_components,
     connected_components_twostar,
 )
+
+ROUNDS_ONLY = -1  # limit(0) collects nothing, and 0 rows > -1
+
+
+@pytest.fixture(autouse=True)
+def _distributed_rounds(monkeypatch):
+    monkeypatch.setattr(graph, "LOCAL_FINISH_ROWS", ROUNDS_ONLY)
 
 
 def _labels(df):
@@ -100,3 +115,72 @@ def test_twostar_fails_loud_when_budget_exhausted(spark):
     )
     with _pytest.raises(RuntimeError, match="did not detect a fixpoint"):
         connected_components_twostar(e, max_iter=1).collect()
+
+
+def _blob_edges() -> list[tuple[int, int]]:
+    rng = random.Random(11)
+    edges = []
+    for base in (10, 40, 70):
+        ids = [base + i for i in range(9)]
+        edges += [(rng.choice(ids), rng.choice(ids)) for _ in range(14)]
+    return edges
+
+
+_PARITY_GRAPHS = {
+    "chain": ("src long, dst long", [(i, i + 1) for i in range(25)]),
+    "hub_largest_id": ("src long, dst long", [(99, i) for i in range(6)]),
+    "random_blobs": ("src long, dst long", _blob_edges()),
+    "self_loop_only_vertex": ("src long, dst long", [(7, 7), (3, 1), (1, 2)]),
+    "null_endpoint": (
+        "src long, dst long",
+        [(None, 3), (3, 4), (5, None), (None, None)],
+    ),
+    "string_ids": (
+        "src string, dst string",
+        [("b", "a"), ("c", "b"), ("y", "x"), ("é", "z")],
+    ),
+    "zero_edges": ("src long, dst long", []),
+}
+
+
+@pytest.mark.parametrize("graph_name", sorted(_PARITY_GRAPHS))
+@pytest.mark.parametrize(
+    "op", [connected_components, connected_components_twostar]
+)
+def test_local_finish_matches_distributed_rounds(
+    spark, monkeypatch, op, graph_name
+):
+    """The driver-side union-find returns the rounds' (id, label) rows —
+    including a self-loop-only vertex, NULL endpoints and string ids,
+    where the two operators' own contracts differ — typed like the
+    vertex column."""
+    ddl, edges = _PARITY_GRAPHS[graph_name]
+    e = spark.createDataFrame(edges, ddl)
+    rounds = op(e)
+    rounds_rows = Counter(tuple(r) for r in rounds.collect())
+    monkeypatch.setattr(graph, "LOCAL_FINISH_ROWS", 10**6)
+    local = op(e)
+    assert [f.dataType for f in local.schema] == [f.dataType for f in rounds.schema]
+    assert local.columns == ["id", "label"] == rounds.columns
+    assert Counter(tuple(r) for r in local.collect()) == rounds_rows
+
+
+def test_local_finish_bound_is_inclusive(spark, monkeypatch):
+    """A graph of exactly LOCAL_FINISH_ROWS canonical edges finishes on
+    the driver with no round; one edge more takes the rounds."""
+    e = spark.createDataFrame([(i, i + 1) for i in range(4)], "src long, dst long")
+    star_passes = []
+    small_star = graph._small_star
+    monkeypatch.setattr(
+        graph, "_small_star", lambda lt: star_passes.append(1) or small_star(lt)
+    )
+
+    def rounds_at(bound: int) -> int:
+        star_passes.clear()
+        monkeypatch.setattr(graph, "LOCAL_FINISH_ROWS", bound)
+        labels = connected_components_twostar(e).collect()
+        assert sorted(tuple(r) for r in labels) == [(i, 0) for i in range(5)]
+        return len(star_passes)
+
+    assert rounds_at(4) == 0
+    assert rounds_at(3) > 0
