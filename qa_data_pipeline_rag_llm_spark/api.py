@@ -261,7 +261,7 @@ def curate(
         minhash_lsh_pairs,
     )
     from qa_data_pipeline_rag_llm_spark.operators.graph import (
-        connected_components_twostar,
+        connected_components,
     )
     from qa_data_pipeline_rag_llm_spark.plans.queries_curation import (
         gopher_verdict,
@@ -281,7 +281,7 @@ def curate(
         jaccard_threshold=jaccard_threshold,
         validate=validate,
     )
-    labels = connected_components_twostar(pairs, src="doc_a", dst="doc_b")
+    labels = connected_components(pairs, src="doc_a", dst="doc_b")
     clusters = base.select("doc_id").join(
         labels.withColumnRenamed("id", "doc_id"), "doc_id", "left"
     )

@@ -8,8 +8,10 @@ groupBy + rejoin on the cluster key — one shuffle, no driver state.
 Distributed HDBSCAN does not exist in Spark ML (SURVEY.md §4 'custom-rule
 assessment'), so M2 ships two stand-ins behind the same column contract:
 
-  * :func:`kmeans_assign` — Spark ML KMeans (documented divergence: fixed
-    k, never emits −1, RNG-seeded → rows-only checkable);
+  * :func:`kmeans_assign` — the engine's one k-means, the exact
+    fixed-point Lloyd loop of ``operators/ivf.py`` (documented
+    divergence: fixed k, never emits −1; deterministic, smallest-id
+    init);
   * :func:`density_cluster` — deterministic DBSCAN-style density
     clustering over SRP-LSH buckets that DOES reproduce the reference's
     noise semantics (sparse region → label −1) and is fully
@@ -22,7 +24,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from qa_data_pipeline_rag_llm_spark.operators.ivf import (
+    lloyd_assign,
+    lloyd_centroids_v6,
+)
 from qa_data_pipeline_rag_llm_spark.operators.similarity import srp_signatures
+
+# Lloyd rounds behind kmeans_assign: each round is one collect of the
+# k × dims centroid table (2 Spark jobs), so 3 rounds build in 8 jobs
+KMEANS_ITERS = 3
 
 
 def similar_items(
@@ -127,7 +137,7 @@ def density_cluster_graph(
       3. exact cosine verification at ``tau`` (index-order fold, the
          oracle-exact kernel — false collisions die here);
       4. connected components over verified pairs
-         (:func:`operators.graph.connected_components_twostar`,
+         (:func:`operators.graph.connected_components`, two-star,
          O(log n) rounds);
       5. components with ≥ ``min_cluster_size`` members become clusters
          labeled by their minimum member id; everything else is −1.
@@ -152,7 +162,7 @@ def density_cluster_graph(
     """
     from qa_data_pipeline_rag_llm_spark.functions.vectors import cosine
     from qa_data_pipeline_rag_llm_spark.operators.graph import (
-        connected_components_twostar,
+        connected_components,
     )
 
     # stage 0: exact-dup collapse (vec → min-id representative + count).
@@ -222,7 +232,7 @@ def density_cluster_graph(
         .filter(cos_expr >= F.lit(tau))
         .select("id_a", "id_b")
     )
-    comp = connected_components_twostar(verified, "id_a", "id_b")
+    comp = connected_components(verified, "id_a", "id_b")
     rep_lbl = rep_vecs.join(comp, rep_vecs["__rep"] == comp.id, "left").select(
         F.col("__rep"),
         F.col(vec_col),
@@ -255,18 +265,17 @@ def kmeans_assign(
     k: int = 10,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    seed: int = 42,
 ) -> DataFrame:
-    """Assign KMeans cluster labels to an ``array<float>`` column (M2
-    stand-in; semantics diverge from the reference's HDBSCAN — no noise
-    label, fixed k). Returns (id, cluster)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feat = df.select(
-        F.col(id_col), array_to_vector(F.col(vec_col)).alias("features")
-    )
-    model = KMeans(k=k, seed=seed, featuresCol="features").fit(feat)
-    return model.transform(feat).select(
-        F.col(id_col), F.col("prediction").alias("cluster")
+    """Assign k-means cluster labels in [0, k) to an ``array<float>``
+    column (M2 stand-in; semantics diverge from the reference's HDBSCAN —
+    no noise label, fixed k). ``KMEANS_ITERS`` rounds of
+    ``ivf.lloyd_centroids_v6``, then ``ivf.lloyd_assign``: deterministic
+    (init = the k smallest-id vectors) and exact integer arithmetic.
+    Returns (id, cluster); an empty cluster drops out, so a label can go
+    unused; a zero-row input returns zero rows."""
+    cents = lloyd_centroids_v6(df, k, KMEANS_ITERS, id_col, vec_col)
+    # the trainer's cluster ids are its seeds' vector ids; renumbering in
+    # cid order keeps labels in [0, k) and argmin's smaller-id tie-break
+    return lloyd_assign(
+        df, [(i, c6) for i, (_, c6) in enumerate(cents)], id_col, vec_col
     )

@@ -2,27 +2,28 @@
 
 LSH emits pairwise matches; real corpus dedup must group them
 transitively (A~B, B~C ⇒ {A,B,C} keep one). That is connected
-components — union-find does not distribute, so this is iterative
-min-label propagation: every vertex repeatedly adopts the smallest label
-in its neighborhood until fixpoint, converging in O(graph diameter)
-rounds. Near-dup graphs are unions of small dense blobs, so the
-diameter — and the round count — is tiny regardless of corpus size.
+components, and union-find does not distribute, so above a size bound
+the graph runs the large-star / small-star alternation (Kiveris et al.,
+"Connected Components in MapReduce and Beyond", 2014): O(log n) rounds
+on ANY topology, and an edge set that SHRINKS every round toward one
+star per component, so per-round cost falls as the graph collapses.
+Round count is the cost that matters in this model (PAPERS.md,
+"Approximation Algorithms for Large Scale Data Analysis"); a
+propagation loop would need O(diameter) rounds and fail on long chains.
 
-Small graphs finish on the driver: both operators checkpoint their
-canonical edge frame once, take at most ``LOCAL_FINISH_ROWS`` + 1 of
-its rows in one collect, and when the whole frame fits run union-find
+Small graphs finish on the driver: the operator checkpoints its
+canonical edge frame once, takes at most ``LOCAL_FINISH_ROWS`` + 1 of
+its rows in one collect, and when the whole frame fits runs union-find
 there (root = minimum id, so labels are the rounds' labels by
 construction) — every round pays Spark's fixed per-job cost however few
 edges are left, and a near-dup pair graph is often a few dozen edges.
-The distributed rounds below run only above the bound.
+The distributed rounds run only above the bound.
 
-Scale notes: the symmetrized edge list is checkpointed once and reused
-every round; labels are re-checkpointed per round so lineage stays O(1)
-instead of growing by one join per iteration (the classic iterative-
-Spark failure mode). The per-round convergence check is a scalar
-``count()`` — an action, not a data collect. For planet-scale graphs
-swap the loop body for the large-star/small-star variant (Kiveris et
-al., "Connected Components in MapReduce and Beyond") — same contract.
+Scale notes: each round's edge frame is checkpointed (lazily, then
+materialized by the convergence aggregate), so lineage stays O(1)
+instead of growing by one star pass per round. The per-round
+convergence check is a two-scalar signature aggregate, never a collect
+of edges.
 """
 
 from __future__ import annotations
@@ -36,15 +37,14 @@ from pyspark.sql.types import StructField, StructType
 LOCAL_FINISH_ROWS = 100_000
 
 
-def _finish_locally(e: DataFrame, a: str, b: str) -> DataFrame | None:
-    """(id, label) of the edge frame ``e`` by union-find on the driver,
-    or None when ``e`` holds more than ``LOCAL_FINISH_ROWS`` rows (one
-    bounded collect decides). Every endpoint is a vertex; label = the
-    minimum id of its component, the fixpoint both distributed loops
-    reach. A NULL endpoint is a vertex labelled NULL that joins nothing
-    (a NULL never equals in the rounds' joins either). Ids compare as
-    Python values, which order ints and strings as Spark's ``min``
-    does. Both columns are typed like the edge columns."""
+def _finish_locally(e: DataFrame) -> DataFrame | None:
+    """(id, label) of the NULL-free ``(u, v)`` edge frame ``e`` by
+    union-find on the driver, or None when ``e`` holds more than
+    ``LOCAL_FINISH_ROWS`` rows (one bounded collect decides). Every
+    endpoint is a vertex; label = the minimum id of its component, the
+    fixpoint the distributed rounds reach. Ids compare as Python values,
+    which order ints and strings as Spark's ``least`` does. Both columns
+    are typed like the edge columns."""
     rows = e.limit(LOCAL_FINISH_ROWS + 1).collect()
     if len(rows) > LOCAL_FINISH_ROWS:
         return None
@@ -56,19 +56,18 @@ def _finish_locally(e: DataFrame, a: str, b: str) -> DataFrame | None:
             x = parent[x]
         return x
 
-    for x, y in ((r[a], r[b]) for r in rows):
+    for x, y in rows:
         parent.setdefault(x, x)
         parent.setdefault(y, y)
-        if x is not None and y is not None:
-            rx, ry = find(x), find(y)
-            if rx != ry:
-                parent[max(rx, ry)] = min(rx, ry)
+        rx, ry = find(x), find(y)
+        if rx != ry:
+            parent[max(rx, ry)] = min(rx, ry)
     # an Arrow table becomes a LocalTableScan: no Python worker task
     # re-serializes the rows each time the labels are scanned
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
 
-    dtype = e.schema[a].dataType
+    dtype = e.schema["u"].dataType
     t = to_arrow_type(dtype)
     ids = list(parent)
     return e.sparkSession.createDataFrame(
@@ -79,67 +78,6 @@ def _finish_locally(e: DataFrame, a: str, b: str) -> DataFrame | None:
             }
         ),
         StructType([StructField("id", dtype), StructField("label", dtype)]),
-    )
-
-
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 30,
-) -> DataFrame:
-    """(src, dst) undirected edges → (id, label) with label = min vertex
-    id reachable. Only vertices present in edges appear; callers join
-    isolated vertices back with label = own id. At most
-    ``LOCAL_FINISH_ROWS`` symmetrized edges finish on the driver."""
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    e = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    e = e.localCheckpoint(eager=True)  # scanned every round — cut lineage once
-    local = _finish_locally(e, "a", "b")
-    if local is not None:
-        return local
-    labels = (
-        e.select(F.col("a").alias("id")).distinct().withColumn("label", F.col("id"))
-    )
-    for _ in range(max_iter):
-        nbr_min = (
-            e.join(labels, e.b == labels.id)
-            .groupBy("a")
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        # r13: the change flag is computed INSIDE the label-update
-        # projection (new < old ⇔ a neighbor label undercut ours), so the
-        # convergence check needs no second join against the old labels —
-        # and the LAZY localCheckpoint is materialized by the count()
-        # itself: one job per round where r12 launched two (the eager
-        # checkpoint, then a join+count). Labels are identical rows; only
-        # the job cadence changes.
-        new_labels = (
-            labels.join(nbr_min, labels.id == nbr_min.a, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_min", F.col("label"))
-                ).alias("label"),
-                (F.coalesce("nbr_min", F.col("label")) < F.col("label")).alias(
-                    "_chg"
-                ),
-            )
-            .localCheckpoint(eager=False)
-        )
-        changed = new_labels.filter("_chg").count()
-        labels = new_labels.drop("_chg")
-        if changed == 0:
-            return labels
-    # a silently-truncated labeling merges nothing visibly wrong into
-    # downstream keep/drop decisions — fail loud instead. Near-dup blob
-    # graphs converge in a handful of rounds; a high-diameter graph
-    # (long chains) needs connected_components_twostar, which converges
-    # in O(log n) rounds on any topology.
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds "
-        "(graph diameter exceeds max_iter); use "
-        "connected_components_twostar for high-diameter graphs"
     )
 
 
@@ -208,27 +146,23 @@ def _small_star(lt: DataFrame) -> DataFrame:
     )
 
 
-def connected_components_twostar(
+def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 30,
 ) -> DataFrame:
-    """(src, dst) undirected edges → (id, label): the large-star /
-    small-star alternation (Kiveris et al., "Connected Components in
-    MapReduce and Beyond", 2014) — the planet-scale twin of
-    :func:`connected_components`.
+    """(src, dst) undirected edges → (id, label), one row per vertex.
 
-    Min-label propagation converges in O(diameter) rounds, which is fine
-    for near-dup blobs but not for long-chained graphs; two-star
-    converges in O(log n) rounds on ANY topology and, crucially, its
-    edge multiset SHRINKS monotonically toward one star per component —
-    per-round cost decreases instead of rescanning the full frame.
-    Same contract as connected_components: only vertices present in the
-    input appear; label = component minimum.
+    Contract: every non-NULL endpoint appears, labelled with the minimum
+    id of its component; a vertex whose only edge is a self-loop (or
+    whose other endpoint is NULL) appears labelled itself. NULL
+    endpoints are dropped: a NULL id is no vertex. Vertices absent from
+    ``edges`` do not appear; callers join them back with label = own id.
 
     At most ``LOCAL_FINISH_ROWS`` canonical edges finish on the driver
-    (module docstring); the rounds below run only above that bound.
+    (module docstring); above that bound the large-star / small-star
+    rounds run, and ``max_iter`` caps them.
 
     Convergence detection: a (count, xor-of-pair-hashes) signature of
     the canonical directed edge set — two scalar aggregates, no
@@ -239,32 +173,32 @@ def connected_components_twostar(
     """
     # materialize the edge input FIRST (r11): the caller's edge subtree
     # is often expensive (e.g. density_cluster_graph's cosine-verified
-    # pairs) and was computed twice — once for verts, once for round 1.
-    # The loop checkpoints every round anyway, so this only moves the
-    # first materialization ahead of the fan-out.
-    # r13: canonicalized at entry (u > v, self-loops dropped, distinct) —
-    # the invariant both star passes now rely on to skip the per-round
-    # re-symmetrization distinct. Same edge SET the old first _sym built.
+    # pairs) and feeds both the vertex set and round 1.
+    # Canonical at entry (u >= v, distinct): the invariant both star
+    # passes rely on to skip a per-round re-symmetrization distinct.
+    # greatest/least skip a NULL, so (NULL, x) becomes the self-loop
+    # (x, x) and only an all-NULL edge has a NULL u.
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .select(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )
-        .filter(F.col("u") != F.col("v"))
+        .filter(F.col("u").isNotNull())
         .distinct()
         .localCheckpoint(eager=True)
     )
-    local = _finish_locally(e, "u", "v")
+    local = _finish_locally(e)
     if local is not None:
         return local
     # verts is consumed exactly once (the final label join) and derives
-    # from the checkpointed e, so eagerly checkpointing it was one whole
-    # wasted job per call (r13; it predated the entry checkpoint of e).
+    # from the checkpointed e, so it needs no checkpoint of its own;
+    # self-loops count here and nowhere after
     verts = (
         e.select(F.col("u").alias("id"))
         .union(e.select(F.col("v").alias("id")))
         .distinct()
     )
+    e = e.filter(F.col("u") != F.col("v"))
 
     def signature(d: DataFrame):
         # order-independent, partial-aggregatable, overflow-free: exact
@@ -299,9 +233,8 @@ def connected_components_twostar(
         # exhausting the budget without a fixpoint means e is NOT yet a
         # star forest: a vertex can still hold several non-minimal parent
         # edges, and the join below would emit multiple wrong rows per
-        # vertex. Same fail-loud contract as connected_components — a
-        # silently corrupt labeling poisons every downstream dedup
-        # decision (review r03).
+        # vertex. A silently corrupt labeling poisons every downstream
+        # dedup decision (review r03), so fail loud.
         raise RuntimeError(
             f"two-star did not detect a fixpoint in max_iter={max_iter} "
             "rounds; raise max_iter (O(log n)+1 rounds suffice for any "

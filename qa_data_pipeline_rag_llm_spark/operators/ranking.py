@@ -9,7 +9,9 @@ are reproducible and oracle-hashable (SURVEY.md §2.6).
 
 Scale note: row_number over a partitioned window is a single hash shuffle
 on the group key plus a per-partition sort — the same cost shape at 100 TB,
-with AQE handling skewed group keys. No driver involvement.
+with AQE handling skewed group keys. No driver involvement. A single
+ranked list (one group) is :func:`ordered_take` instead: no window over
+the input, and only ≤ k rows a partition move.
 """
 
 from __future__ import annotations
@@ -35,6 +37,31 @@ def top_k_per_group(
         F.col(rank_col) <= k
     )
     return out if keep_rank else out.drop(rank_col)
+
+
+def ordered_take(
+    df: DataFrame,
+    order_by: Sequence[Column],
+    k: int,
+    rank_col: str = "rank",
+) -> DataFrame:
+    """The top ``k`` rows of ``df`` under ``order_by``, numbered 1..k in
+    ``rank_col``. ``order_by`` must be a total order (pass a unique
+    column last) for deterministic output.
+
+    One ordered take — ``orderBy(...).limit(k)``, Spark's TakeOrdered: a
+    local top-k per partition, then one merge of ≤ k rows a partition —
+    and a row number over the ≤ k survivors, never a window over the
+    input. The take's output is ONE partition, so the row number's
+    window is partitioned by ``spark_partition_id()``, constant there and
+    not foldable: a literal key is optimized away, and an unpartitioned
+    window logs Spark's "No Partition Defined" WARN each time it plans."""
+    w = Window.partitionBy(F.spark_partition_id()).orderBy(*order_by)
+    return (
+        df.orderBy(*order_by)
+        .limit(k)
+        .withColumn(rank_col, F.row_number().over(w))
+    )
 
 
 def salted_top_k(

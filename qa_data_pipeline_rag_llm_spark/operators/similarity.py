@@ -114,23 +114,17 @@ def cosine_topk_one_probe(
     """:func:`cosine_topk` for a ``probe`` frame of exactly ONE row: same
     rows, same tie-break, same ``rank``.
 
-    With one probe the per-probe top-k is a global one, so it is one
-    ordered take (``orderBy(sim desc, id).limit(k)``, Spark's
-    TakeOrdered: a local top-k per partition, then a merge of ≤ k rows a
-    partition) and the rank is a row number over the ≤ k survivors — no
-    window over the candidates and none of ``salted_top_k``'s two
-    shuffles. With several probes the take would rank them together;
-    that is ``cosine_topk``'s job."""
-    order = [F.desc("sim"), F.col(id_col)]
-    return (
-        cosine_scores(vectors, probe, id_col, vec_col, probe_id, probe_vec)
-        .orderBy(*order)
-        .limit(k)
-        .withColumn(
-            "rank", F.row_number().over(Window.partitionBy(probe_id).orderBy(*order))
-        )
-        .select(probe_id, id_col, "sim", "rank")
-    )
+    With one probe the per-probe top-k is a global one, so it is
+    ``ranking.ordered_take`` — none of ``salted_top_k``'s two shuffles.
+    With several probes the take would rank them together; that is
+    ``cosine_topk``'s job."""
+    from qa_data_pipeline_rag_llm_spark.operators.ranking import ordered_take
+
+    return ordered_take(
+        cosine_scores(vectors, probe, id_col, vec_col, probe_id, probe_vec),
+        [F.desc("sim"), F.col(id_col)],
+        k,
+    ).select(probe_id, id_col, "sim", "rank")
 
 
 def hyperplane_weights(dims: int, planes: int) -> list[list[float]]:

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from qa_data_pipeline_rag_llm_spark.operators.ranking import ordered_take
 from qa_data_pipeline_rag_llm_spark.operators.similarity import cosine_topk
 from qa_data_pipeline_rag_llm_spark.plans.queries import _t, register
 from qa_data_pipeline_rag_llm_spark.plans.queries_retrieval import (
@@ -132,15 +133,10 @@ def _eval_metrics(ranked: DataFrame, rel: DataFrame) -> DataFrame:
         .limit(1)
         .select(F.col("c").alias("dcg"))
     )
-    # ideal ordering: TakeOrdered top-k of the grade frame (scale-safe),
-    # then rank + cumsum over the bounded k rows
-    ideal = (
-        rel.orderBy(F.col("rel").desc(), "doc_id")
-        .limit(EVAL_K)
-        .withColumn(
-            "irnk",
-            F.row_number().over(Window.orderBy(F.col("rel").desc(), "doc_id")),
-        )
+    # ideal ordering: ordered take of the grade frame (scale-safe), then
+    # cumsum over the bounded k rows
+    ideal = ordered_take(
+        rel, [F.col("rel").desc(), F.col("doc_id")], EVAL_K, "irnk"
     )
     wicum = Window.orderBy("irnk").rowsBetween(
         Window.unboundedPreceding, Window.currentRow

@@ -145,9 +145,10 @@ KM_ITERS = 3
     "identical across engines — floor vs truncate diverge on negatives), "
     "init = the k smallest vec_ids, squared-L2 as exact integer sums, "
     "argmin tie-broken by cluster id, centroid update by integer "
-    "floor-average. Unlike Spark ML KMeans (RNG init, float accumulation "
-    "— kmeans_clusters, rows-only), this whole ITERATIVE pipeline "
-    "hash-matches a DuckDB recursive CTE. Runs on the IVF trainer "
+    "floor-average. Unlike Spark ML KMeans (RNG init, float "
+    "accumulation), this whole ITERATIVE pipeline hash-matches a DuckDB "
+    "recursive CTE (kmeans_clusters runs the same loop at k=10 and "
+    "registers invariant verdicts). Runs on the IVF trainer "
     "(operators/ivf.py lloyd_centroids_v6): per iteration a zero-shuffle "
     "one-expression argmin plus one map-side-combined groupBy(cluster, "
     "pos) exchange, k × dims centroids collected to the driver (guarded "

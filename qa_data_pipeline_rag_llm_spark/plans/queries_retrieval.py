@@ -19,9 +19,10 @@ RRF is a full outer join of two tiny top-k lists.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from qa_data_pipeline_rag_llm_spark.operators.ranking import ordered_take
 from qa_data_pipeline_rag_llm_spark.operators.similarity import cosine_topk
 from qa_data_pipeline_rag_llm_spark.plans.queries import _t, register
 
@@ -247,13 +248,12 @@ def _bm25_scored(spark: SparkSession, sf_dir: str, depth: int) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.round(F.sum(F.expr(f"{_IDF} * {_TFW}")), 4).alias("score"))
     )
-    # orderBy+limit compiles to TakeOrderedAndProject (per-partition top-k
-    # + driver merge of depth·P rows) — the rank window then touches only
-    # `depth` rows instead of pushing the corpus-sized score frame through
-    # a single task (VERDICT r02 #1).
-    top = scored.orderBy(F.col("score").desc(), "doc_id").limit(depth)
-    w = Window.orderBy(F.col("score").desc(), "doc_id")
-    return top.withColumn("rnk", F.row_number().over(w))
+    # one ordered take: the rank touches only `depth` rows instead of
+    # pushing the corpus-sized score frame through a single task
+    # (VERDICT r02 #1)
+    return ordered_take(
+        scored, [F.col("score").desc(), F.col("doc_id")], depth, "rnk"
+    )
 
 
 # same nullif zero-norm guard as queries_vector._O_COS (review r03) —
@@ -316,10 +316,8 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("rrf"),
     )
-    w = Window.orderBy(F.col("rrf").desc(), "doc_id")
-    return (
-        fused.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= RRF_TOPK)
+    return ordered_take(
+        fused, [F.col("rrf").desc(), F.col("doc_id")], RRF_TOPK, "rnk"
     )
 
 

@@ -571,12 +571,11 @@ def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_clusters_minhash",
     None,  # oracle injected below: recursive-CTE transitive closure
-    doc="Near-dup pairs → duplicate CLUSTERS via distributed connected "
-    "components (iterative min-label propagation, O(diameter) rounds — "
-    "operators/graph.py). The keep-one-per-cluster decision needs the "
-    "transitive grouping LSH pairs alone don't give. Iterative and "
-    "driver-coordinated, yet every round is a distributed join; oracle "
-    "is a DuckDB recursive CTE over the same verified pairs.",
+    doc="Near-dup pairs → duplicate CLUSTERS via connected components "
+    "(operators/graph.py: union-find on the driver for small pair graphs, "
+    "else large-star/small-star rounds). The keep-one-per-cluster "
+    "decision needs the transitive grouping LSH pairs alone don't give; "
+    "oracle is a DuckDB recursive CTE over the same verified pairs.",
 )
 def dedup_clusters_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from qa_data_pipeline_rag_llm_spark.operators.graph import connected_components
@@ -690,38 +689,15 @@ REGISTRY["near_dup_prune_documents"].oracle = f"""
 @register(
     "dedup_clusters_twostar",
     None,  # oracle injected below: identical to dedup_clusters_minhash
-    doc="The planet-scale twin of dedup_clusters_minhash: connected "
-    "components via the large-star/small-star alternation (Kiveris et "
-    "al. 2014, operators/graph.py) instead of min-label propagation — "
-    "O(log n) rounds on ANY topology (propagation needs O(diameter)) "
-    "and a monotonically SHRINKING edge set, so per-round cost falls as "
-    "the graph collapses toward one star per component. Hash-matches "
-    "the same recursive-CTE oracle, so both algorithms are pinned to "
-    "identical cluster assignments.",
+    doc="The same plan as dedup_clusters_minhash under its own name: "
+    "the one connected-components operator, whose distributed path is "
+    "the large-star/small-star alternation (Kiveris et al. 2014, "
+    "operators/graph.py) — O(log n) rounds on ANY topology and a "
+    "monotonically SHRINKING edge set. Hash-matches the same "
+    "recursive-CTE oracle.",
 )
 def dedup_clusters_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from qa_data_pipeline_rag_llm_spark.operators.graph import (
-        connected_components_twostar,
-    )
-
-    docs = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(
-        docs,
-        num_perm=NUM_PERM,
-        bands=BANDS,
-        shingle_n=SHINGLE_N,
-        jaccard_threshold=JACCARD_T,
-    ).select("doc_a", "doc_b")
-    labels = connected_components_twostar(pairs, "doc_a", "doc_b")
-    full = docs.select("doc_id").join(
-        labels, docs.doc_id == labels.id, "left"
-    ).select(
-        "doc_id", F.coalesce("label", "doc_id").alias("cluster_id")
-    )
-    w = Window.partitionBy("cluster_id")
-    return full.select(
-        "doc_id", "cluster_id", F.count("*").over(w).alias("cluster_size")
-    )
+    return REGISTRY["dedup_clusters_minhash"].spark(spark, sf_dir)
 
 
 REGISTRY["dedup_clusters_twostar"].oracle = REGISTRY[

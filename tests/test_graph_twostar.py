@@ -1,12 +1,13 @@
-"""Two-star connected components (operators/graph.py) vs min-label
-propagation: identical labels on adversarial topologies, including the
-long chains where propagation needs O(diameter) rounds and two-star
-needs O(log n).
+"""Connected components (operators/graph.py): the distributed
+large-star / small-star rounds against the driver-side union-find on
+adversarial topologies, including the long chains where a propagation
+loop would need O(diameter) rounds and two-star needs O(log n).
 
-Both operators finish graphs of at most ``graph.LOCAL_FINISH_ROWS``
+The operator finishes graphs of at most ``graph.LOCAL_FINISH_ROWS``
 edges on the driver, so every test here lowers that bound below any
 row count (an empty frame's included) to exercise the distributed
-rounds; the parity tests at the end compare the two paths."""
+rounds; ``_both`` and the parity tests at the end raise it above every
+row count to get the union-find's labels, the independent reference."""
 
 from __future__ import annotations
 
@@ -17,12 +18,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from qa_data_pipeline_rag_llm_spark.operators import graph
-from qa_data_pipeline_rag_llm_spark.operators.graph import (
-    connected_components,
-    connected_components_twostar,
-)
+from qa_data_pipeline_rag_llm_spark.operators.graph import connected_components
 
 ROUNDS_ONLY = -1  # limit(0) collects nothing, and 0 rows > -1
+DRIVER_ONLY = 10**6
 
 
 @pytest.fixture(autouse=True)
@@ -34,37 +33,32 @@ def _labels(df):
     return sorted((r["id"], r["label"]) for r in df.collect())
 
 
-def _both(spark, edges):
+def _both(spark, monkeypatch, edges):
+    """(union-find labels, distributed-round labels) of ``edges``."""
     e = spark.createDataFrame(edges, "src long, dst long")
-    return (
-        _labels(connected_components(e)),
-        _labels(connected_components_twostar(e)),
-    )
+    rounds = _labels(connected_components(e))
+    monkeypatch.setattr(graph, "LOCAL_FINISH_ROWS", DRIVER_ONLY)
+    return _labels(connected_components(e)), rounds
 
 
-def test_twostar_matches_propagation_on_chain(spark):
-    # a 25-node path (within propagation's round budget)
-    a, b = _both(spark, [(i, i + 1) for i in range(25)])
+def test_twostar_matches_propagation_on_chain(spark, monkeypatch):
+    # a 25-node path
+    a, b = _both(spark, monkeypatch, [(i, i + 1) for i in range(25)])
     assert a == b
     assert all(lbl == 0 for _, lbl in b)
 
 
 def test_twostar_handles_diameter_beyond_propagation_budget(spark):
-    """A 40-node path: propagation's 30-round budget is exceeded (it now
-    fails LOUD — silent truncation would poison keep/drop decisions);
-    two-star labels it correctly in O(log n) rounds."""
-    import pytest as _pytest
-
+    """A 40-node path: longer than the 30-round budget a propagation
+    loop would need; two-star labels it correctly in O(log n) rounds."""
     e = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "src long, dst long"
     )
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(e).collect()
-    got = _labels(connected_components_twostar(e))
+    got = _labels(connected_components(e))
     assert all(lbl == 0 for _, lbl in got) and len(got) == 41
 
 
-def test_twostar_matches_propagation_on_mixed_graph(spark):
+def test_twostar_matches_propagation_on_mixed_graph(spark, monkeypatch):
     rng = random.Random(7)
     edges = []
     # several blobs + a chain + isolated pairs, shuffled ids
@@ -74,21 +68,21 @@ def test_twostar_matches_propagation_on_mixed_graph(spark):
     edges += [(i, i + 1) for i in range(700, 720)]
     edges += [(900, 901), (903, 902)]
     edges = [(a, b) for a, b in edges if a != b]
-    a, b = _both(spark, edges)
+    a, b = _both(spark, monkeypatch, edges)
     assert a == b
 
 
-def test_twostar_two_node_and_triangle(spark):
-    a, b = _both(spark, [(5, 2), (10, 11), (11, 12), (12, 10)])
+def test_twostar_two_node_and_triangle(spark, monkeypatch):
+    a, b = _both(spark, monkeypatch, [(5, 2), (10, 11), (11, 12), (12, 10)])
     assert a == b
     got = dict(b)
     assert got[5] == 2 and got[2] == 2
     assert got[10] == got[11] == got[12] == 10
 
 
-def test_twostar_star_graph_reversed_ids(spark):
+def test_twostar_star_graph_reversed_ids(spark, monkeypatch):
     # hub has the LARGEST id — exercises both star directions
-    a, b = _both(spark, [(99, i) for i in range(5)])
+    a, b = _both(spark, monkeypatch, [(99, i) for i in range(5)])
     assert a == b
     assert all(lbl == 0 for _, lbl in b)
 
@@ -98,7 +92,7 @@ def test_twostar_edge_set_shrinks_to_star(spark):
     n_vertices - n_components."""
     edges = [(i, i + 1) for i in range(20)] + [(50, 51), (51, 52)]
     e = spark.createDataFrame(edges, "src long, dst long")
-    labels = connected_components_twostar(e)
+    labels = connected_components(e)
     n_vertices = labels.count()
     n_components = labels.select("label").distinct().count()
     n_non_roots = labels.filter(F.col("id") != F.col("label")).count()
@@ -114,7 +108,7 @@ def test_twostar_fails_loud_when_budget_exhausted(spark):
         [(i, i + 1) for i in range(64)], "src long, dst long"
     )
     with _pytest.raises(RuntimeError, match="did not detect a fixpoint"):
-        connected_components_twostar(e, max_iter=1).collect()
+        connected_components(e, max_iter=1).collect()
 
 
 def _blob_edges() -> list[tuple[int, int]]:
@@ -144,25 +138,34 @@ _PARITY_GRAPHS = {
 
 
 @pytest.mark.parametrize("graph_name", sorted(_PARITY_GRAPHS))
-@pytest.mark.parametrize(
-    "op", [connected_components, connected_components_twostar]
-)
-def test_local_finish_matches_distributed_rounds(
-    spark, monkeypatch, op, graph_name
-):
+def test_local_finish_matches_distributed_rounds(spark, monkeypatch, graph_name):
     """The driver-side union-find returns the rounds' (id, label) rows —
-    including a self-loop-only vertex, NULL endpoints and string ids,
-    where the two operators' own contracts differ — typed like the
-    vertex column."""
+    including a self-loop-only vertex, NULL endpoints and string ids —
+    typed like the vertex column."""
     ddl, edges = _PARITY_GRAPHS[graph_name]
     e = spark.createDataFrame(edges, ddl)
-    rounds = op(e)
+    rounds = connected_components(e)
     rounds_rows = Counter(tuple(r) for r in rounds.collect())
-    monkeypatch.setattr(graph, "LOCAL_FINISH_ROWS", 10**6)
-    local = op(e)
+    monkeypatch.setattr(graph, "LOCAL_FINISH_ROWS", DRIVER_ONLY)
+    local = connected_components(e)
     assert [f.dataType for f in local.schema] == [f.dataType for f in rounds.schema]
     assert local.columns == ["id", "label"] == rounds.columns
     assert Counter(tuple(r) for r in local.collect()) == rounds_rows
+
+
+@pytest.mark.parametrize("bound", [ROUNDS_ONLY, DRIVER_ONLY])
+def test_null_endpoints_dropped_self_loops_kept(spark, monkeypatch, bound):
+    """The one contract on both paths: every non-NULL endpoint appears
+    with its component's minimum id — a self-loop-only vertex and the
+    other end of a NULL edge label themselves — and no NULL id does."""
+    monkeypatch.setattr(graph, "LOCAL_FINISH_ROWS", bound)
+    e = spark.createDataFrame(
+        [(7, 7), (None, 3), (5, None), (None, None), (2, 1), (9, 2)],
+        "src long, dst long",
+    )
+    assert _labels(connected_components(e)) == [
+        (1, 1), (2, 1), (3, 3), (5, 5), (7, 7), (9, 1)
+    ]
 
 
 def test_local_finish_bound_is_inclusive(spark, monkeypatch):
@@ -178,7 +181,7 @@ def test_local_finish_bound_is_inclusive(spark, monkeypatch):
     def rounds_at(bound: int) -> int:
         star_passes.clear()
         monkeypatch.setattr(graph, "LOCAL_FINISH_ROWS", bound)
-        labels = connected_components_twostar(e).collect()
+        labels = connected_components(e).collect()
         assert sorted(tuple(r) for r in labels) == [(i, 0) for i in range(5)]
         return len(star_passes)
 

@@ -43,8 +43,8 @@ def test_topk_never_exceeds_k(spark, tables):
 
 
 def test_kmeans_deterministic_with_seed(spark, tables):
-    a = kmeans_assign(tables["embeddings"], k=5, seed=7).collect()
-    b = kmeans_assign(tables["embeddings"], k=5, seed=7).collect()
+    a = kmeans_assign(tables["embeddings"], k=5).collect()
+    b = kmeans_assign(tables["embeddings"], k=5).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     assert len({r["cluster"] for r in a}) == 5
 
