@@ -16,7 +16,7 @@ defaults are the deterministic fakes, so tests can assert exact output.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 # Re-exported pipeline stages (entry point 1: clean → rank → join → merge)
@@ -237,51 +237,86 @@ def curate(
     (rule_keep, dedup_kept, keep, reason) row per doc. The prune keeps
     the minimum id among each cluster's RULE-PASSING members (falling
     back to the cluster's global min when none pass), so a duplicate
-    cluster survives whenever ANY copy clears the quality gate.
+    cluster survives whenever ANY copy clears the quality gate. A NULL
+    id is no document: its row gets no verdict.
 
     ``id_col`` must uniquely identify rows and be totally ordered (the
     survivor choice needs a deterministic order); ``validate=True``
-    fail-louds on duplicate ids via the dedup family's contract guard.
-    Scale shape: the (doc_id, text) projection is materialized ONCE
-    (an eager ``localCheckpoint``) and read five times — the unique-id
-    guard (with ``validate``), the MinHash signatures, the shingle sets,
-    the rule gate (pure projection) and the cluster join — so the
-    caller's lineage (a CSV read, windows, joins) runs once, not five
-    times. Then the banded
-    near-dup pipeline (never O(n²)), two-star components on the pair
-    graph (on the driver below ``graph.LOCAL_FINISH_ROWS`` edges, else
-    O(log n) rounds), and 1:1 doc_id joins.
+    raises ``ValueError`` at call time on duplicate ids (two NULL ids
+    count as a duplicate), on both paths below.
+
+    Scale shape: (doc_id, rule_keep, distinct shingle set) is
+    materialized ONCE (an eager ``localCheckpoint``, which also counts
+    its rows as an observed metric), so the caller's lineage (a CSV
+    read, windows, joins), the Gopher gate and the shingle UDF each run
+    once per document. Then one of two paths:
+
+    * at most ``graph.LOCAL_FINISH_ROWS`` documents: the driver collects
+      (doc_id, rule_keep, LSH band keys), checks id uniqueness on those
+      rows, pairs the docs whose band keys are equal and, at most
+      ``LOCAL_FINISH_ROWS`` candidate pairs, hands them back as a local
+      frame to ``dedup._verify_jaccard`` (the Jaccard and its rounding
+      stay Spark's), union-finds the verified edges
+      (``graph.union_find``) and picks each cluster's survivor. The
+      verdicts come back as an Arrow ``LocalTableScan``: collecting them
+      starts no job. Eager: 4 jobs — the checkpoint, the collect, and
+      the verification's broadcast and collect.
+    * above either bound (or with duplicate ids and ``validate=False``):
+      the distributed plan over the checkpoint — the unique-id guard
+      (one eager aggregate, with ``validate``), the banded near-dup
+      pipeline (never O(n²)), two-star components on the pair graph
+      (eager; on the driver at ≤ ``LOCAL_FINISH_ROWS`` edges, else
+      O(log n) rounds), and 1:1 doc_id joins, returned lazily.
     """
     # anchor on the canonical registry module FIRST: entering the plans
     # package through queries_curation leaves it mid-import when
     # queries_streaming's oracle composition needs its registrations
     # (the bottom-import block must run in queries.py's own order)
     import qa_data_pipeline_rag_llm_spark.plans.queries  # noqa: F401
+    from qa_data_pipeline_rag_llm_spark.functions.text import word_shingles
+    from qa_data_pipeline_rag_llm_spark.operators import graph
     from qa_data_pipeline_rag_llm_spark.operators.dedup import (
-        minhash_lsh_pairs,
+        _assert_unique_ids,
+        set_lsh_pairs,
     )
-    from qa_data_pipeline_rag_llm_spark.operators.graph import (
-        connected_components,
+    from qa_data_pipeline_rag_llm_spark.operators.util import (
+        ensure_parallelism,
     )
     from qa_data_pipeline_rag_llm_spark.plans.queries_curation import (
         gopher_verdict,
     )
 
-    base = df.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    ).localCheckpoint(eager=True)
-    rules = gopher_verdict(base).select(
-        "doc_id", F.col("keep").alias("rule_keep")
+    # the checkpoint job counts its rows as it runs (an observed
+    # metric), so the driver-finish decision costs no job of its own
+    n_docs = Observation()
+    base = (
+        gopher_verdict(
+            df.select(
+                F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
+            ),
+            carry=("text",),
+        )
+        .select(
+            "doc_id",
+            F.col("keep").alias("rule_keep"),
+            F.array_distinct(word_shingles("text", shingle_n)).alias("shset"),
+        )
+        .observe(n_docs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
     )
-    pairs = minhash_lsh_pairs(
-        base,
-        num_perm=num_perm,
-        bands=bands,
-        shingle_n=shingle_n,
-        jaccard_threshold=jaccard_threshold,
-        validate=validate,
+    sets = base.select(F.col("doc_id").alias("doc"), "shset")
+    if n_docs.get["n"] <= graph.LOCAL_FINISH_ROWS:
+        local = _curate_locally(
+            base, sets, num_perm, bands, jaccard_threshold, validate
+        )
+        if local is not None:
+            return local
+    if validate:
+        _assert_unique_ids(base, "doc_id")
+    pairs = set_lsh_pairs(
+        ensure_parallelism(sets), num_perm, bands, jaccard_threshold
     )
-    labels = connected_components(pairs, src="doc_a", dst="doc_b")
+    labels = graph.connected_components(pairs, src="doc_a", dst="doc_b")
     clusters = base.select("doc_id").join(
         labels.withColumnRenamed("id", "doc_id"), "doc_id", "left"
     )
@@ -297,7 +332,7 @@ def curate(
     # A cluster with no passing member falls back to the global min so
     # dedup_kept stays defined — every copy drops as 'quality' anyway.
     w = Window.partitionBy("cluster_id")
-    merged = rules.join(clusters, "doc_id")
+    merged = base.select("doc_id", "rule_keep").join(clusters, "doc_id")
     survivor = F.coalesce(
         F.min(F.when(F.col("rule_keep"), F.col("doc_id"))).over(w),
         F.min("doc_id").over(w),
@@ -315,4 +350,125 @@ def curate(
         "dedup_kept",
         (F.col("rule_keep") & F.col("dedup_kept")).alias("keep"),
         reason.alias("reason"),
+    )
+
+
+def _curate_locally(
+    base: DataFrame,
+    sets: DataFrame,
+    num_perm: int,
+    bands: int,
+    jaccard_threshold: float,
+    validate: bool,
+) -> DataFrame | None:
+    """:func:`curate`'s verdicts finished on the driver from one collect
+    of the checkpoint's (doc, rule_keep, band keys) rows — the caller
+    has counted at most ``graph.LOCAL_FINISH_ROWS`` of them — or None
+    when their band collisions give more than that many candidate
+    pairs, or (with ``validate=False``) an id repeats: the distributed
+    plan's answer to duplicates is its own. Rows, types and SQL
+    three-valued logic (a NULL ``rule_keep`` passes no gate and fails
+    none) are the distributed plan's."""
+    from collections import Counter
+
+    from pyspark.sql.types import (
+        BooleanType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from qa_data_pipeline_rag_llm_spark.operators import graph
+    from qa_data_pipeline_rag_llm_spark.operators.dedup import (
+        _duplicate_ids,
+        _verify_jaccard,
+        band_keys,
+        shingle_signatures,
+    )
+
+    bound = graph.LOCAL_FINISH_ROWS
+    keyed = shingle_signatures(
+        base.select(F.col("doc_id").alias("doc"), "rule_keep", "shset"),
+        num_perm,
+        carry=("rule_keep",),
+    ).select("doc", "rule_keep", F.array(*band_keys(num_perm, bands)).alias("keys"))
+    rows = keyed.collect()
+    if any(c > 1 for c in Counter(r["doc"] for r in rows).values()):
+        if not validate:
+            return None
+        raise _duplicate_ids("doc_id")
+    rows = [r for r in rows if r["doc"] is not None]
+    buckets: dict = {}
+    for r in rows:
+        for b, key in enumerate(r["keys"]):
+            buckets.setdefault((b, key), []).append(r["doc"])
+    cand: set = set()
+    for docs in buckets.values():
+        for i, x in enumerate(docs):
+            for y in docs[i + 1 :]:
+                cand.add((x, y) if x < y else (y, x))
+                if len(cand) > bound:
+                    return None
+    spark = base.sparkSession
+    id_type = base.schema["doc_id"].dataType
+    edges = []
+    if cand:
+        pairs = graph.local_frame(
+            spark,
+            StructType(
+                [StructField("doc_a", id_type), StructField("doc_b", id_type)]
+            ),
+            list(cand),
+        )
+        # the sets ride as one broadcast both verification joins reuse:
+        # one job builds it and one collects the edges, whatever size
+        # statistics the caller's frame carried into the checkpoint (an
+        # unknown size plans sort-merge joins, and AQE then spends four
+        # jobs). Restricting it to the candidates' sets would cost a job
+        # of its own (a semi-join's local broadcast) or a py4j call per
+        # id (a literal IN list), so at the bound it ships every set.
+        edges = [
+            tuple(e)
+            for e in _verify_jaccard(pairs, F.broadcast(sets), jaccard_threshold)
+            .select("doc_a", "doc_b")
+            .collect()
+        ]
+    labels = graph.union_find(edges)
+    cluster = {r["doc"]: labels.get(r["doc"], r["doc"]) for r in rows}
+    members: dict = {}
+    for r in rows:
+        members.setdefault(cluster[r["doc"]], []).append(r)
+    survivor = {
+        c: min(
+            (r["doc"] for r in ms if r["rule_keep"]),
+            default=min(r["doc"] for r in ms),
+        )
+        for c, ms in members.items()
+    }
+    verdicts = []
+    for r in rows:
+        doc, rule = r["doc"], r["rule_keep"]
+        kept = doc == survivor[cluster[doc]]
+        verdicts.append((
+            doc,
+            cluster[doc],
+            rule,
+            kept,
+            # SQL AND: False wins over NULL
+            False if rule is False or not kept else rule,
+            "quality" if rule is False else "keep" if kept else "near_dup",
+        ))
+    return graph.local_frame(
+        spark,
+        StructType(
+            [
+                StructField("doc_id", id_type),
+                StructField("cluster_id", id_type),
+                StructField("rule_keep", BooleanType()),
+                StructField("dedup_kept", BooleanType()),
+                StructField("keep", BooleanType()),
+                StructField("reason", StringType()),
+            ]
+        ),
+        verdicts,
     )

@@ -66,12 +66,18 @@ def _assert_unique_ids(df: DataFrame, id_col: str) -> None:
         .count()
     )
     if dup:
-        raise ValueError(
-            f"dedup: id column {id_col!r} has duplicate rows — shingle "
-            "sets are built per-row (array_distinct), so duplicated ids "
-            "produce repeated or conflicting pair rows. Reduce to one "
-            "row per document id first."
-        )
+        raise _duplicate_ids(id_col)
+
+
+def _duplicate_ids(id_col: str) -> ValueError:
+    """The error of the one-row-per-doc precondition, wherever it is
+    checked."""
+    return ValueError(
+        f"dedup: id column {id_col!r} has duplicate rows — shingle "
+        "sets are built per-row (array_distinct), so duplicated ids "
+        "produce repeated or conflicting pair rows. Reduce to one "
+        "row per document id first."
+    )
 
 
 def _doc_shingles(
@@ -149,27 +155,27 @@ def _doc_shingle_sets_h(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 16,
-    shingle_n: int = 3,
+def shingle_signatures(
+    sets: DataFrame, num_perm: int = 16, carry: tuple[str, ...] = ()
 ) -> DataFrame:
-    """Per-doc MinHash signature: columns mh0..mh{k-1}, each the MIN of the
-    i-th affine permutation (a_i·h + b_i) mod 2^31−1 over the doc's shingle
-    hashes (functions.hashing.minhash_coeffs).
+    """Per-doc MinHash signature of a (doc, shset) frame whose ``shset``
+    is the doc's shingle array: (doc, *carry, mh0..mh{k-1}), each the MIN
+    of the i-th affine permutation (a_i·h + b_i) mod 2^31−1 over the
+    shingle hashes (functions.hashing.minhash_coeffs). Duplicate
+    shingles cannot change a min, so a raw shingle array and its
+    ``array_distinct`` set give the same signature — the one code path
+    for :func:`minhash_signatures` (shingles from text) and callers that
+    already hold the set (``api.curate``'s checkpoint).
 
-    Computed as a pure per-row projection — the shingle array is hashed
-    ONCE (one md5 each), then every permutation is an ``array_min`` over an
-    integer ``transform``. No explode, no distinct, no shuffle: at 100 TB
-    this is map-only over the scan (duplicate shingles within a doc can't
-    change a min). Measured at sf0.1: ~10× faster than explode+groupBy,
-    ~4× faster than one-md5-per-permutation.
+    A pure per-row projection — each shingle is hashed ONCE (one md5),
+    then every permutation is an ``array_min`` over an integer
+    ``transform``. No explode, no distinct, no shuffle: at 100 TB this is
+    map-only over the scan. Measured at sf0.1: ~10× faster than
+    explode+groupBy, ~4× faster than one-md5-per-permutation.
     """
-    df = ensure_parallelism(df)
-    hs = F.transform(word_shingles(text_col, shingle_n), shingle_int_hash)
-    base = df.select(F.col(id_col).alias("doc"), hs.alias("__hs"))
+    base = sets.select(
+        "doc", *carry, F.transform("shset", shingle_int_hash).alias("__hs")
+    )
 
     def mh(i: int, a: int, b: int) -> F.Column:
         # one parsed expression per permutation (r12): the lambda form
@@ -183,26 +189,51 @@ def minhash_signatures(
 
     coeffs = minhash_coeffs(num_perm)
     return base.select(
-        "doc", *[mh(i, a, b) for i, (a, b) in enumerate(coeffs)]
+        "doc", *carry, *[mh(i, a, b) for i, (a, b) in enumerate(coeffs)]
     )
+
+
+def minhash_signatures(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    num_perm: int = 16,
+    shingle_n: int = 3,
+) -> DataFrame:
+    """Per-doc MinHash signature of each row's text: (doc, mh0..mh{k-1})
+    by :func:`shingle_signatures` over the row's word shingles."""
+    df = ensure_parallelism(df)
+    return shingle_signatures(
+        df.select(
+            F.col(id_col).alias("doc"),
+            word_shingles(text_col, shingle_n).alias("shset"),
+        ),
+        num_perm,
+    )
+
+
+def band_keys(num_perm: int = 16, bands: int = 4) -> list[F.Column]:
+    """The LSH band keys of a signature row, ``band0..band{bands-1}``:
+    one md5 per ``num_perm/bands`` consecutive signature slots. Two docs
+    are a candidate pair when any band key of the same index is equal."""
+    rows = num_perm // bands
+    return [
+        F.md5(F.concat_ws("|", *[f"mh{b * rows + r}" for r in range(rows)])).alias(
+            f"band{b}"
+        )
+        for b in range(bands)
+    ]
 
 
 def minhash_bands(
     sig: DataFrame, num_perm: int = 16, bands: int = 4
 ) -> DataFrame:
     """Signature frame (doc, mh0..mh{k-1}) → LSH band rows
-    (doc, band_id, band_key): one md5 band key per ``num_perm/bands``
-    consecutive signature slots. Stateless projection + generator — safe
-    in batch AND in a streaming plan (no shuffle, no state)."""
-    rows = num_perm // bands
-    band_cols = [
-        F.md5(F.concat_ws("|", *[f"mh{b * rows + r}" for r in range(rows)])).alias(
-            f"band{b}"
-        )
-        for b in range(bands)
-    ]
+    (doc, band_id, band_key), one per :func:`band_keys` column. Stateless
+    projection + generator — safe in batch AND in a streaming plan (no
+    shuffle, no state)."""
     return (
-        sig.select("doc", *band_cols)
+        sig.select("doc", *band_keys(num_perm, bands))
         .select(
             "doc",
             F.explode(
@@ -219,6 +250,27 @@ def minhash_bands(
     )
 
 
+def set_lsh_pairs(
+    sets: DataFrame,
+    num_perm: int = 16,
+    bands: int = 4,
+    jaccard_threshold: float = 0.5,
+) -> DataFrame:
+    """(doc_a, doc_b, jaccard) near-duplicate pairs of a (doc, shset)
+    frame of per-doc distinct shingle sets: band collisions of the
+    sets' signatures, verified by :func:`_verify_jaccard` over the same
+    sets."""
+    banded = minhash_bands(shingle_signatures(sets, num_perm), num_perm, bands)
+    cand = (
+        banded.alias("a")
+        .join(banded.alias("b"), ["band_id", "band_key"])
+        .filter(F.col("a.doc") < F.col("b.doc"))
+        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
+        .distinct()
+    )
+    return _verify_jaccard(cand, sets, jaccard_threshold)
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -230,25 +282,19 @@ def minhash_lsh_pairs(
     validate: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs by MinHash-LSH banding, verified with exact
-    Jaccard over the shingle sets: (doc_a, doc_b, jaccard).
+    Jaccard over the shingle sets: (doc_a, doc_b, jaccard) — one
+    shingle-set projection feeds both the signatures and the
+    verification (:func:`set_lsh_pairs`).
 
     ``df`` must carry ONE row per ``id_col`` (shingle sets are per-row;
     duplicate ids corrupt the pair output — see ``_assert_unique_ids``).
     Pass ``validate=True`` to enforce it with one eager aggregate."""
     if validate:
         _assert_unique_ids(df, id_col)
-    sig = minhash_signatures(df, text_col, id_col, num_perm, shingle_n)
-    banded = minhash_bands(sig, num_perm, bands)
-    cand = (
-        banded.alias("a")
-        .join(banded.alias("b"), ["band_id", "band_key"])
-        .filter(F.col("a.doc") < F.col("b.doc"))
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .distinct()
-    )
-    return _verify_jaccard(
-        cand,
+    return set_lsh_pairs(
         _doc_shingle_sets(df, text_col, id_col, shingle_n),
+        num_perm,
+        bands,
         jaccard_threshold,
     )
 

@@ -19,6 +19,14 @@ construction) — every round pays Spark's fixed per-job cost however few
 edges are left, and a near-dup pair graph is often a few dozen edges.
 The distributed rounds run only above the bound.
 
+Two driver-side helpers serve every such finish, here and in
+``api.curate`` (which finishes a whole small corpus's near-dup prune the
+same way): :func:`union_find`, the one union-find (Python id order,
+root = minimum id), and :func:`local_frame`, the one builder of an
+Arrow-backed result frame. The latter's ``LocalTableScan`` costs no job
+to collect and no Python worker to scan. ``LOCAL_FINISH_ROWS`` is the
+one bound both finishes use.
+
 Scale notes: each round's edge frame is checkpointed (lazily, then
 materialized by the convergence aggregate), so lineage stays O(1)
 instead of growing by one star pass per round. The per-round
@@ -32,22 +40,19 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-# Edge rows at or below which a graph finishes on the driver (a bound,
-# not an option: 10^5 id pairs are a few MB of driver memory).
+# Edge rows at or below which a graph finishes on the driver, and the
+# documents and candidate pairs at or below which api.curate does (a
+# bound, not an option: 10^5 id pairs are a few MB of driver memory).
 LOCAL_FINISH_ROWS = 100_000
 
 
-def _finish_locally(e: DataFrame) -> DataFrame | None:
-    """(id, label) of the NULL-free ``(u, v)`` edge frame ``e`` by
-    union-find on the driver, or None when ``e`` holds more than
-    ``LOCAL_FINISH_ROWS`` rows (one bounded collect decides). Every
-    endpoint is a vertex; label = the minimum id of its component, the
-    fixpoint the distributed rounds reach. Ids compare as Python values,
-    which order ints and strings as Spark's ``least`` does. Both columns
-    are typed like the edge columns."""
-    rows = e.limit(LOCAL_FINISH_ROWS + 1).collect()
-    if len(rows) > LOCAL_FINISH_ROWS:
-        return None
+def union_find(edges) -> dict:
+    """{vertex: label} over the endpoints of the ``(x, y)`` pairs in
+    ``edges`` by union-find on the driver; label = the minimum id of the
+    vertex's component, the fixpoint the distributed rounds reach. Ids
+    compare as Python values, which order ints and strings as Spark's
+    ``least`` does. The one union-find of the engine: connected
+    components and ``api.curate`` both finish through it."""
     parent: dict = {}
 
     def find(x):
@@ -56,28 +61,51 @@ def _finish_locally(e: DataFrame) -> DataFrame | None:
             x = parent[x]
         return x
 
-    for x, y in rows:
+    for x, y in edges:
         parent.setdefault(x, x)
         parent.setdefault(y, y)
         rx, ry = find(x), find(y)
         if rx != ry:
             parent[max(rx, ry)] = min(rx, ry)
-    # an Arrow table becomes a LocalTableScan: no Python worker task
-    # re-serializes the rows each time the labels are scanned
+    return {v: find(v) for v in parent}
+
+
+def local_frame(spark, schema: StructType, rows: list) -> DataFrame:
+    """``rows`` (tuples of Python values in ``schema``'s field order) as
+    an Arrow-backed frame. An Arrow table becomes a ``LocalTableScan``:
+    collecting it starts no job, and no Python worker task
+    re-serializes the rows each time a plan scans them."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
 
-    dtype = e.schema["u"].dataType
-    t = to_arrow_type(dtype)
-    ids = list(parent)
-    return e.sparkSession.createDataFrame(
+    return spark.createDataFrame(
         pa.table(
             {
-                "id": pa.array(ids, type=t),
-                "label": pa.array([find(v) for v in ids], type=t),
+                f.name: pa.array(
+                    [r[i] for r in rows], type=to_arrow_type(f.dataType)
+                )
+                for i, f in enumerate(schema)
             }
         ),
+        schema,
+    )
+
+
+def _finish_locally(e: DataFrame) -> DataFrame | None:
+    """(id, label) of the NULL-free ``(u, v)`` edge frame ``e`` by
+    :func:`union_find`, or None when ``e`` holds more than
+    ``LOCAL_FINISH_ROWS`` rows (one bounded collect decides). Every
+    endpoint is a vertex. Both columns are typed like the edge
+    columns."""
+    rows = e.limit(LOCAL_FINISH_ROWS + 1).collect()
+    if len(rows) > LOCAL_FINISH_ROWS:
+        return None
+    labels = union_find(rows)
+    dtype = e.schema["u"].dataType
+    return local_frame(
+        e.sparkSession,
         StructType([StructField("id", dtype), StructField("label", dtype)]),
+        list(labels.items()),
     )
 
 

@@ -35,7 +35,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from qa_data_pipeline_rag_llm_spark.operators.ranking import ordered_take
-from qa_data_pipeline_rag_llm_spark.operators.similarity import cosine_topk
+from qa_data_pipeline_rag_llm_spark.operators.similarity import (
+    cosine_topk_one_probe,
+)
 from qa_data_pipeline_rag_llm_spark.plans.queries import _t, register
 from qa_data_pipeline_rag_llm_spark.plans.queries_retrieval import (
     _O_BM25_SCORED,
@@ -270,7 +272,7 @@ def _vec_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("probe_id"),
         F.col("embedding").alias("probe_vec"),
     )
-    return cosine_topk(emb, q, k=EVAL_K).select(
+    return cosine_topk_one_probe(emb, q, k=EVAL_K).select(
         F.col("vec_id").alias("doc_id"), F.col("rank").alias("rnk")
     )
 

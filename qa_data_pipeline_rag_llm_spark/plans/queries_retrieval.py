@@ -23,7 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from qa_data_pipeline_rag_llm_spark.operators.ranking import ordered_take
-from qa_data_pipeline_rag_llm_spark.operators.similarity import cosine_topk
+from qa_data_pipeline_rag_llm_spark.operators.similarity import (
+    cosine_topk_one_probe,
+)
 from qa_data_pipeline_rag_llm_spark.plans.queries import _t, register
 
 QUERY_TERMS = ["spark", "join", "stream"]
@@ -305,7 +307,7 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
     )
     vec = (
-        cosine_topk(emb, q, k=RRF_DEPTH)
+        cosine_topk_one_probe(emb, q, k=RRF_DEPTH)
         .select(F.col("vec_id").alias("doc_id"), F.col("rank").alias("vec_r"))
     )
     fused = lex.join(vec, "doc_id", "full_outer").select(

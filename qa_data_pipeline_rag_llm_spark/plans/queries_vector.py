@@ -25,6 +25,7 @@ from qa_data_pipeline_rag_llm_spark.operators.clustering import (
 from qa_data_pipeline_rag_llm_spark.operators.similarity import (
     ann_lsh_topk,
     cosine_topk,
+    cosine_topk_one_probe,
     embedding_near_dup,
     hyperplane_weights,
     srp_signatures,
@@ -497,7 +498,7 @@ def rag_retrieve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
     )
     top = (
-        cosine_topk(emb, probe, k=TOP_K)
+        cosine_topk_one_probe(emb, probe, k=TOP_K)
         .filter(F.col("sim") >= 0.1)
         .select(F.col("rank").cast("int").alias("rank"), "vec_id", "sim")
     )

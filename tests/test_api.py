@@ -215,6 +215,171 @@ def test_curate_validate_rejects_duplicate_ids(spark):
         api.curate(df)
 
 
+_CLEAN = (
+    "the quick brown fox jumps over a lazy dog and runs home with "
+    "its friends to share some food after the long day of running "
+    "around the field"
+)
+_OTHER = (
+    "completely different words about parquet shuffles joins and the "
+    "many window functions that a query engine runs for analytics "
+    "workloads every single day of the week"
+)
+# clusters with _CLEAN, but its symbol tail fails the Gopher gate
+_JUNK = _CLEAN + " @@@@@@@@@@@@@@@@@@@@@@@@@@"
+_CURATE_CASES = {
+    # name: (id type, rows, curate kwargs, {doc_id: (cluster_id, reason)})
+    "int_ids": (
+        "long",
+        [(1, _CLEAN), (2, _CLEAN + " tonight"), (3, "zz qq"), (4, _OTHER),
+         (5, None)],
+        {},
+        {1: (1, "keep"), 2: (1, "near_dup"), 3: (3, "quality"),
+         4: (4, "keep"), 5: (5, "quality")},
+    ),
+    # "B" < "a" < "b" in Spark's binary string order
+    "string_ids": (
+        "string",
+        [("b", _CLEAN), ("a", _CLEAN + " tonight"), ("B", _CLEAN + " again"),
+         ("zz", "zz qq"), ("c", _OTHER)],
+        {},
+        {"B": ("B", "keep"), "a": ("B", "near_dup"), "b": ("B", "near_dup"),
+         "zz": ("zz", "quality"), "c": ("c", "keep")},
+    ),
+    "min_id_fails_gate": (
+        "long",
+        [(1, _JUNK), (2, _CLEAN), (3, _OTHER)],
+        {},
+        {1: (1, "quality"), 2: (1, "keep"), 3: (3, "keep")},
+    ),
+    "all_members_fail_gate": (
+        "long",
+        [(1, _JUNK), (2, _JUNK + " extra")],
+        {},
+        {1: (1, "quality"), 2: (1, "quality")},
+    ),
+    # a NULL id is no document: no verdict, and no pair with its twin
+    "null_id": (
+        "long",
+        [(None, _CLEAN), (1, _CLEAN), (2, _OTHER)],
+        {},
+        {1: (1, "keep"), 2: (2, "keep")},
+    ),
+    "zero_rows": ("long", [], {}, {}),
+    "one_row": ("long", [(1, _CLEAN)], {}, {1: (1, "keep")}),
+    "hub_of_identical_texts": (
+        "long",
+        [(i, _CLEAN) for i in (17, 11, 15, 12, 19, 13)]
+        + [(14, _CLEAN + " tonight"), (20, _OTHER)],
+        {},
+        {11: (11, "keep"), 20: (20, "keep"),
+         **{i: (11, "near_dup") for i in (12, 13, 14, 15, 17, 19)}},
+    ),
+    # 1 and 2 share 2 of 4 distinct shingles: Jaccard exactly 0.5, kept
+    # at threshold 0.5; 3 and 4 share 3 of 7 (0.43). One-slot bands make
+    # the 0.5 pair a candidate. Five words fail the Gopher length gate.
+    "jaccard_at_threshold": (
+        "long",
+        [(1, "alpha beta gamma delta epsilon"),
+         (2, "beta gamma delta epsilon zeta"),
+         (3, "one two three four five six"),
+         (4, "two three four five six seven eight nine")],
+        {"num_perm": 16, "bands": 16, "jaccard_threshold": 0.5},
+        {1: (1, "quality"), 2: (1, "quality"), 3: (3, "quality"),
+         4: (4, "quality")},
+    ),
+}
+
+
+def _verdicts(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+@pytest.mark.parametrize("case", sorted(_CURATE_CASES))
+def test_curate_driver_finish_matches_distributed_plan(spark, monkeypatch, case):
+    """api.curate finishes corpora of at most graph.LOCAL_FINISH_ROWS
+    documents on the driver and returns a LocalTableScan; above the bound
+    it returns the distributed plan. Forcing the bound both ways gives
+    the same rows and column types."""
+    from qa_data_pipeline_rag_llm_spark.operators import graph
+
+    id_type, rows, kw, want = _CURATE_CASES[case]
+    df = spark.createDataFrame(rows, f"doc_id {id_type}, text string")
+    monkeypatch.setattr(graph, "LOCAL_FINISH_ROWS", 10**6)
+    local = api.curate(df, **kw)
+    assert "LocalTableScan" in local._jdf.queryExecution().executedPlan().toString()
+    monkeypatch.setattr(graph, "LOCAL_FINISH_ROWS", -1)
+    rounds = api.curate(df, **kw)
+    assert "LocalTableScan" not in rounds._jdf.queryExecution().executedPlan().toString()
+    assert local.dtypes == rounds.dtypes
+    got = _verdicts(local)
+    assert got == _verdicts(rounds)
+    assert {r[0]: (r[1], r[5]) for r in got} == want
+    for doc, cluster, rule, kept, keep, reason in got:
+        assert keep == (rule and kept)
+
+
+def test_curate_candidate_pair_bound_takes_distributed_plan(spark, monkeypatch):
+    """A hub of identical texts within the document bound but over it in
+    candidate pairs (8 docs; the six identical texts alone make 15
+    pairs, against a bound of 10) takes the distributed plan, with the
+    driver finish's rows."""
+    from qa_data_pipeline_rag_llm_spark.operators import graph
+
+    _, rows, kw, want = _CURATE_CASES["hub_of_identical_texts"]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    monkeypatch.setattr(graph, "LOCAL_FINISH_ROWS", 10)
+    out = api.curate(df, **kw)
+    assert "LocalTableScan" not in out._jdf.queryExecution().executedPlan().toString()
+    assert {r[0]: (r[1], r[5]) for r in _verdicts(out)} == want
+
+
+@pytest.mark.parametrize("bound", [-1, 10**6])
+@pytest.mark.parametrize("ids", [(1, 1), (None, None)])
+def test_curate_validate_rejects_duplicate_ids_on_both_paths(
+    spark, monkeypatch, bound, ids
+):
+    """Duplicate ids raise at call time on the driver finish and on the
+    distributed plan; two NULL ids count as a duplicate, as the
+    distributed guard's groupBy counts them."""
+    from qa_data_pipeline_rag_llm_spark.operators import graph
+
+    monkeypatch.setattr(graph, "LOCAL_FINISH_ROWS", bound)
+    df = spark.createDataFrame(
+        [(ids[0], _CLEAN), (ids[1], _OTHER)], "doc_id long, text string"
+    )
+    with pytest.raises(ValueError, match="duplicate rows"):
+        api.curate(df)
+
+
+def test_curate_job_budget(spark):
+    """On a 50-doc corpus with planted near-duplicates, api.curate starts
+    at most 4 Spark jobs (checkpoint, one collect, the verification's
+    broadcast and collect), and collecting its LocalTableScan result
+    starts none. Read from the status tracker under a job group."""
+    import random
+
+    rnd = random.Random(5)
+    words = _OTHER.split() + _CLEAN.split()
+    texts = [" ".join(rnd.choice(words) for _ in range(40)) for _ in range(40)]
+    rows = [(i, t) for i, t in enumerate(texts)]
+    rows += [(100 + i, texts[i % 5] + " again") for i in range(10)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("test-curate-build", "api.curate")
+        out = api.curate(df)
+        sc.setJobGroup("test-curate-collect", "collect")
+        got = out.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(tracker.getJobIdsForGroup("test-curate-build")) <= 4
+    assert tracker.getJobIdsForGroup("test-curate-collect") == []
+    flagged = {r.doc_id for r in got if not r.dedup_kept}
+    assert set(range(100, 110)) <= flagged and len(got) == 50
+
+
 
 def _multi_probe_ranker(vectors, probe, k=5, **cols):
     """The registry's multi-probe ``cosine_topk`` behind the one-probe

@@ -307,6 +307,10 @@ def test_no_registry_query_plans_row_udf(spark, tables):
         "retrieval_eval_bm25",
         "eval_recall_curve_bm25",
         "retrieval_overlap_lex_vec",
+        # one-probe vector arms rank with one ordered take
+        # (similarity.cosine_topk_one_probe), not the salted top-k
+        "retrieval_eval_cosine",
+        "rag_retrieve",
     ],
 )
 def test_topk_rank_windows_sit_above_takeordered(spark, name):
@@ -320,8 +324,6 @@ def test_topk_rank_windows_sit_above_takeordered(spark, name):
     "name",
     [
         "cosine_topk_embeddings",
-        "retrieval_eval_cosine",
-        "rag_retrieve",
         # MMR's corpus-sized candidate arm is the same low-cardinality
         # per-probe top-k shape (the greedy itself only sees depth^2 rows)
         "mmr_diversified_retrieval",
