@@ -369,8 +369,6 @@ def _curate_locally(
     plan's answer to duplicates is its own. Rows, types and SQL
     three-valued logic (a NULL ``rule_keep`` passes no gate and fails
     none) are the distributed plan's."""
-    from collections import Counter
-
     from pyspark.sql.types import (
         BooleanType,
         StringType,
@@ -393,7 +391,7 @@ def _curate_locally(
         carry=("rule_keep",),
     ).select("doc", "rule_keep", F.array(*band_keys(num_perm, bands)).alias("keys"))
     rows = keyed.collect()
-    if any(c > 1 for c in Counter(r["doc"] for r in rows).values()):
+    if len({r["doc"] for r in rows}) < len(rows):
         if not validate:
             return None
         raise _duplicate_ids("doc_id")
