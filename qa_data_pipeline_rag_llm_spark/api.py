@@ -247,11 +247,13 @@ def curate(
 
     Scale shape: (doc_id, rule_keep, distinct shingle set) is
     materialized ONCE (an eager ``localCheckpoint``, which also counts
-    its rows as an observed metric), so the caller's lineage (a CSV
-    read, windows, joins), the Gopher gate and the shingle UDF each run
-    once per document. Then one of two paths:
+    its rows and its sets' bytes as observed metrics), so the caller's
+    lineage (a CSV read, windows, joins), the Gopher gate and the
+    shingle UDF each run once per document. Then one of two paths:
 
-    * at most ``graph.LOCAL_FINISH_ROWS`` documents: the driver collects
+    * at most ``graph.LOCAL_FINISH_ROWS`` documents whose sets fit the
+      session's ``spark.sql.autoBroadcastJoinThreshold`` (the
+      verification below broadcasts every set): the driver collects
       (doc_id, rule_keep, LSH band keys), checks id uniqueness on those
       rows, pairs the docs whose band keys are equal and, at most
       ``LOCAL_FINISH_ROWS`` candidate pairs, hands them back as a local
@@ -261,10 +263,13 @@ def curate(
       verdicts come back as an Arrow ``LocalTableScan``: collecting them
       starts no job. Eager: 4 jobs — the checkpoint, the collect, and
       the verification's broadcast and collect.
-    * above either bound (or with duplicate ids and ``validate=False``):
-      the distributed plan over the checkpoint — the unique-id guard
-      (one eager aggregate, with ``validate``), the banded near-dup
-      pipeline (never O(n²)), two-star components on the pair graph
+    * above any of those bounds (or with duplicate ids and
+      ``validate=False``): the distributed plan over the checkpoint —
+      the unique-id guard (one eager aggregate, with ``validate``; none
+      after a candidate-pair overflow, whose collect already proved the
+      ids unique), the banded near-dup pipeline (never O(n²); after an
+      overflow it recomputes the band keys that collect held),
+      two-star components on the pair graph
       (eager; on the driver at ≤ ``LOCAL_FINISH_ROWS`` edges, else
       O(log n) rounds), and 1:1 doc_id joins, returned lazily.
     """
@@ -286,9 +291,12 @@ def curate(
         gopher_verdict,
     )
 
-    # the checkpoint job counts its rows as it runs (an observed
-    # metric), so the driver-finish decision costs no job of its own
-    n_docs = Observation()
+    # the checkpoint job counts its rows and the bytes of its shingle
+    # sets as it runs (observed metrics), so the driver-finish decision
+    # costs no job of its own. The bytes are about what a broadcast of
+    # the sets holds: each string's UTF-8 bytes plus its 8-byte
+    # offset-and-length word (UnsafeArrayData)
+    seen = Observation()
     base = (
         gopher_verdict(
             df.select(
@@ -301,17 +309,33 @@ def curate(
             F.col("keep").alias("rule_keep"),
             F.array_distinct(word_shingles("text", shingle_n)).alias("shset"),
         )
-        .observe(n_docs, F.count(F.lit(1)).alias("n"))
+        .observe(
+            seen,
+            F.count(F.lit(1)).alias("n"),
+            F.sum(
+                F.aggregate(
+                    "shset",
+                    F.lit(0).cast("long"),
+                    lambda acc, s: acc + F.octet_length(s) + 8,
+                )
+            ).alias("set_bytes"),
+        )
         .localCheckpoint(eager=True)
     )
     sets = base.select(F.col("doc_id").alias("doc"), "shset")
-    if n_docs.get["n"] <= graph.LOCAL_FINISH_ROWS:
+    ids_checked = False
+    if seen.get["n"] <= graph.LOCAL_FINISH_ROWS and (
+        seen.get["set_bytes"] or 0
+    ) <= _broadcast_threshold(base.sparkSession):
         local = _curate_locally(
             base, sets, num_perm, bands, jaccard_threshold, validate
         )
         if local is not None:
             return local
-    if validate:
+        # with validate, a repeated id has raised in there: only the
+        # candidate-pair bound gets here, over ids it proved unique
+        ids_checked = True
+    if validate and not ids_checked:
         _assert_unique_ids(base, "doc_id")
     pairs = set_lsh_pairs(
         ensure_parallelism(sets), num_perm, bands, jaccard_threshold
@@ -331,6 +355,8 @@ def curate(
     # gate, losing recoverable content a passing duplicate carried).
     # A cluster with no passing member falls back to the global min so
     # dedup_kept stays defined — every copy drops as 'quality' anyway.
+    # _curate_locally applies this survivor, keep and reason policy in
+    # Python: a change here is a change there.
     w = Window.partitionBy("cluster_id")
     merged = base.select("doc_id", "rule_keep").join(clusters, "doc_id")
     survivor = F.coalesce(
@@ -353,6 +379,19 @@ def curate(
     )
 
 
+def _broadcast_threshold(spark: SparkSession) -> int:
+    """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes
+    (-1, broadcasts off, stays -1); Spark's byte-string suffixes
+    (``10m``, ``64MB``, ``1g``) read as powers of 1024."""
+    import re
+
+    m = re.fullmatch(
+        r"\s*(-?\d+)\s*([kmgtp]?)b?\s*",
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold").lower(),
+    )
+    return int(m[1]) << 10 * "_kmgtp".index(m[2] or "_")
+
+
 def _curate_locally(
     base: DataFrame,
     sets: DataFrame,
@@ -366,9 +405,10 @@ def _curate_locally(
     has counted at most ``graph.LOCAL_FINISH_ROWS`` of them — or None
     when their band collisions give more than that many candidate
     pairs, or (with ``validate=False``) an id repeats: the distributed
-    plan's answer to duplicates is its own. Rows, types and SQL
-    three-valued logic (a NULL ``rule_keep`` passes no gate and fails
-    none) are the distributed plan's."""
+    plan's answer to duplicates is its own. With ``validate=True`` a
+    repeated id raises, so a None then means the ids are unique. Rows,
+    types and SQL three-valued logic (a NULL ``rule_keep`` passes no
+    gate and fails none) are the distributed plan's."""
     from pyspark.sql.types import (
         BooleanType,
         StringType,
@@ -424,7 +464,9 @@ def _curate_locally(
         # unknown size plans sort-merge joins, and AQE then spends four
         # jobs). Restricting it to the candidates' sets would cost a job
         # of its own (a semi-join's local broadcast) or a py4j call per
-        # id (a literal IN list), so at the bound it ships every set.
+        # id (a literal IN list), so it ships every set — which curate
+        # allows only when their observed bytes fit the session's
+        # autoBroadcastJoinThreshold, the size Spark broadcasts itself.
         edges = [
             tuple(e)
             for e in _verify_jaccard(pairs, F.broadcast(sets), jaccard_threshold)
@@ -436,6 +478,8 @@ def _curate_locally(
     members: dict = {}
     for r in rows:
         members.setdefault(cluster[r["doc"]], []).append(r)
+    # curate's Spark survivor, keep and reason expressions, in Python:
+    # a change there is a change here
     survivor = {
         c: min(
             (r["doc"] for r in ms if r["rule_keep"]),

@@ -42,7 +42,9 @@ from pyspark.sql.types import StructField, StructType
 
 # Edge rows at or below which a graph finishes on the driver, and the
 # documents and candidate pairs at or below which api.curate does (a
-# bound, not an option: 10^5 id pairs are a few MB of driver memory).
+# bound, not an option: 10^5 id pairs are a few MB of driver memory;
+# curate's shingle sets, which are not, must also fit the session's
+# broadcast threshold).
 LOCAL_FINISH_ROWS = 100_000
 
 

@@ -205,14 +205,23 @@ def test_curate_survivor_is_min_rule_passing_member(spark):
     assert out2[1].dedup_kept  # the fallback survivor
 
 
-def test_curate_validate_rejects_duplicate_ids(spark):
+def test_curate_validate_rejects_duplicate_ids(spark, monkeypatch):
+    """Duplicate ids raise at call time on the driver finish (bound
+    10**6) and on the distributed plan (bound -1); two NULL ids count as
+    a duplicate, as the distributed guard's groupBy counts them."""
     from qa_data_pipeline_rag_llm_spark import api
+    from qa_data_pipeline_rag_llm_spark.operators import graph
 
-    df = spark.createDataFrame(
-        [(1, "a b c"), (1, "a b c")], "doc_id long, text string"
-    )
-    with pytest.raises(ValueError, match="duplicate rows"):
-        api.curate(df)
+    for bound in (-1, 10**6):
+        monkeypatch.setattr(graph, "LOCAL_FINISH_ROWS", bound)
+        for rows in (
+            [(1, "a b c"), (1, "a b c")],
+            [(1, _CLEAN), (1, _OTHER)],
+            [(None, _CLEAN), (None, _OTHER)],
+        ):
+            df = spark.createDataFrame(rows, "doc_id long, text string")
+            with pytest.raises(ValueError, match="duplicate rows"):
+                api.curate(df)
 
 
 _CLEAN = (
@@ -319,37 +328,41 @@ def test_curate_driver_finish_matches_distributed_plan(spark, monkeypatch, case)
         assert keep == (rule and kept)
 
 
-def test_curate_candidate_pair_bound_takes_distributed_plan(spark, monkeypatch):
-    """A hub of identical texts within the document bound but over it in
-    candidate pairs (8 docs; the six identical texts alone make 15
-    pairs, against a bound of 10) takes the distributed plan, with the
-    driver finish's rows."""
-    from qa_data_pipeline_rag_llm_spark.operators import graph
+@pytest.mark.parametrize("bound", ["candidate_pairs", "set_bytes"])
+def test_curate_over_a_driver_bound_takes_distributed_plan(
+    spark, monkeypatch, bound
+):
+    """A hub of identical texts within the document bound takes the
+    distributed plan, with the driver finish's rows, when it is over
+    another bound: in candidate pairs (8 docs; the six identical texts
+    alone make 15 pairs, against a bound of 10), or in the bytes of its
+    shingle sets (a few KB, against a 1 KB broadcast threshold). The
+    unique-id guard runs on the distributed plan only when the driver
+    has not already checked the ids on its collect."""
+    from qa_data_pipeline_rag_llm_spark.operators import dedup, graph
 
+    guards = []
+    guard = dedup._assert_unique_ids
+    monkeypatch.setattr(
+        dedup, "_assert_unique_ids", lambda *a: guards.append(a) or guard(*a)
+    )
     _, rows, kw, want = _CURATE_CASES["hub_of_identical_texts"]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    monkeypatch.setattr(graph, "LOCAL_FINISH_ROWS", 10)
-    out = api.curate(df, **kw)
-    assert "LocalTableScan" not in out._jdf.queryExecution().executedPlan().toString()
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(threshold)
+    if bound == "candidate_pairs":
+        monkeypatch.setattr(graph, "LOCAL_FINISH_ROWS", 10)
+    else:
+        spark.conf.set(threshold, "1k")
+    try:
+        out = api.curate(df, **kw)
+    finally:
+        spark.conf.set(threshold, old)
+    # the verdicts' survivor window, not the driver finish's local table
+    # (the pair graph itself may still finish on the driver)
+    assert "Window" in out._jdf.queryExecution().executedPlan().toString()
     assert {r[0]: (r[1], r[5]) for r in _verdicts(out)} == want
-
-
-@pytest.mark.parametrize("bound", [-1, 10**6])
-@pytest.mark.parametrize("ids", [(1, 1), (None, None)])
-def test_curate_validate_rejects_duplicate_ids_on_both_paths(
-    spark, monkeypatch, bound, ids
-):
-    """Duplicate ids raise at call time on the driver finish and on the
-    distributed plan; two NULL ids count as a duplicate, as the
-    distributed guard's groupBy counts them."""
-    from qa_data_pipeline_rag_llm_spark.operators import graph
-
-    monkeypatch.setattr(graph, "LOCAL_FINISH_ROWS", bound)
-    df = spark.createDataFrame(
-        [(ids[0], _CLEAN), (ids[1], _OTHER)], "doc_id long, text string"
-    )
-    with pytest.raises(ValueError, match="duplicate rows"):
-        api.curate(df)
+    assert len(guards) == (bound == "set_bytes")
 
 
 def test_curate_job_budget(spark):
