@@ -179,7 +179,7 @@ def weighted_sample(
     their selection probabilities would silently correlate (ADVICE r05).
     Passing key_col explicitly asserts uniqueness (no extra scan); when
     it is omitted and the first column is used by convention, that
-    column IS validated (one count-distinct pass) so a non-unique
+    column IS validated (``dedup.has_duplicate_keys``) so a non-unique
     positional key raises instead of silently distorting the sample.
     That safety pass runs an EAGER Spark job at call time; callers who
     need the pre-r6 single-scan laziness can pass ``validate=False``
@@ -187,7 +187,7 @@ def weighted_sample(
     way) and own the uniqueness guarantee themselves (ADVICE r06)."""
     from pyspark.sql import functions as F
 
-    from qa_data_pipeline_rag_llm_spark.operators import hll
+    from qa_data_pipeline_rag_llm_spark.operators import dedup, hll
     from qa_data_pipeline_rag_llm_spark.operators.ranking import (
         salted_top_k,
     )
@@ -195,17 +195,13 @@ def weighted_sample(
     key = key_col or df.columns[0]
     if key not in df.columns:
         raise ValueError(f"key_col {key!r} not in {df.columns}")
-    if key_col is None and validate:
-        dup = (
-            df.groupBy(key).count().where(F.col("count") > 1).limit(1).count()
+    if key_col is None and validate and dedup.has_duplicate_keys(df, key):
+        raise ValueError(
+            f"weighted_sample positional key {key!r} is not unique: "
+            "duplicate keys share the deterministic uniform u and "
+            "distort selection probabilities — pass a unique row id "
+            "as key_col"
         )
-        if dup:
-            raise ValueError(
-                f"weighted_sample positional key {key!r} is not unique: "
-                "duplicate keys share the deterministic uniform u and "
-                "distort selection probabilities — pass a unique row id "
-                "as key_col"
-            )
     u_num = F.expr(hll.spark_w_sql(key)) + 1
     score = F.log(u_num.cast("double") / F.lit(float(1 << 60))) / F.col(
         weight_col

@@ -7,8 +7,9 @@ strings — bit-identical in both engines. Conventions:
   * stable_int32(col): first 8 md5 hex chars → int via base-16 conv.
     DuckDB replays it with a per-hex-char ``strpos('0123456789abcdef', c)``
     polynomial (no ``conv`` there) — same value.
-  * MinHash "permutation" i  ≡  md5(i || ':' || shingle), minimized
-    LEXICOGRAPHICALLY (fixed-width hex ⇒ lexicographic = numeric order).
+  * MinHash "permutation" i  ≡  (a_i · h + b_i) mod (2^31 − 1) with
+    h = stable_int32(shingle) mod (2^31 − 1): one md5 per shingle, the
+    affine family below.
 """
 
 from __future__ import annotations
@@ -41,16 +42,6 @@ def duckdb_hex_to_int(hex_expr: str, nchars: int = 8) -> str:
             f"substr({hex_expr}, {i}, 1)) - 1)"
         )
     return f"CAST({acc} AS BIGINT)"
-
-
-def minhash_key(perm: Column | int, shingle: Column) -> Column:
-    """md5 keyed by permutation id — one 'hash function' per permutation.
-
-    Superseded in the hot path by the affine family below (one md5 per
-    shingle instead of ``num_perm``; ~4× faster at sf0.1), kept for parity
-    tests."""
-    p = F.lit(perm) if isinstance(perm, int) else perm
-    return F.md5(F.concat_ws(":", p.cast("string"), shingle))
 
 
 # ------------------------- affine (universal-hash) minhash permutations

@@ -55,18 +55,20 @@ def _assert_unique_ids(df: DataFrame, id_col: str) -> None:
     the verification independently, yielding repeated pair rows (and,
     when the texts under one id diverge, CONFLICTING similarity values
     for the same pair key), where the pre-r7 global ``.distinct()`` was
-    immune. One eager aggregate (groupBy-count-limit-1), opt-in via the
-    entry points' ``validate=True`` so the hot path stays job-free, same
-    contract shape as ``api.weighted_sample``."""
-    dup = (
-        df.groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .where(F.col("__c") > 1)
-        .limit(1)
-        .count()
-    )
-    if dup:
+    immune. One eager aggregate (:func:`has_duplicate_keys`), opt-in
+    via the entry points' ``validate=True`` so the hot path stays
+    job-free, same contract shape as ``api.weighted_sample``."""
+    if has_duplicate_keys(df, id_col):
         raise _duplicate_ids(id_col)
+
+
+def has_duplicate_keys(df: DataFrame, key: str) -> bool:
+    """Whether two rows of ``df`` share a ``key`` value (NULLs count as
+    one value): one eager aggregate that stops at the first repeat. The
+    one uniqueness check of the engine's entry points, here and in
+    ``api.weighted_sample``; each caller raises its own error."""
+    counts = df.groupBy(key).agg(F.count(F.lit(1)).alias("__c"))
+    return counts.where(F.col("__c") > 1).limit(1).count() > 0
 
 
 def _duplicate_ids(id_col: str) -> ValueError:

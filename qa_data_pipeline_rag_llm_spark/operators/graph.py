@@ -19,13 +19,12 @@ construction) — every round pays Spark's fixed per-job cost however few
 edges are left, and a near-dup pair graph is often a few dozen edges.
 The distributed rounds run only above the bound.
 
-Two driver-side helpers serve every such finish, here and in
-``api.curate`` (which finishes a whole small corpus's near-dup prune the
-same way): :func:`union_find`, the one union-find (Python id order,
-root = minimum id), and :func:`local_frame`, the one builder of an
-Arrow-backed result frame. The latter's ``LocalTableScan`` costs no job
-to collect and no Python worker to scan. ``LOCAL_FINISH_ROWS`` is the
-one bound both finishes use.
+Three driver-side helpers serve these finishes (here, in ``api.curate``
+and in the source-tournament queries), under the one bound
+``LOCAL_FINISH_ROWS``: :func:`collect_bounded`, the one bounded collect;
+:func:`union_find` (Python id order, root = minimum id); and
+:func:`local_frame`, the one builder of an Arrow-backed result frame,
+whose ``LocalTableScan`` costs no job to collect.
 
 Scale notes: each round's edge frame is checkpointed (lazily, then
 materialized by the convergence aggregate), so lineage stays O(1)
@@ -40,11 +39,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-# Edge rows at or below which a graph finishes on the driver, and the
-# documents and candidate pairs at or below which api.curate does (a
-# bound, not an option: 10^5 id pairs are a few MB of driver memory;
-# curate's shingle sets, which are not, must also fit the session's
-# broadcast threshold).
+# Edge rows at or below which a graph finishes on the driver, likewise
+# api.curate's documents and candidate pairs and the source tournament's
+# duel rows (a bound, not an option: 10^5 id pairs are a few MB of
+# driver memory; curate's shingle sets, which are not, must also fit
+# the session's broadcast threshold).
 LOCAL_FINISH_ROWS = 100_000
 
 
@@ -93,22 +92,12 @@ def local_frame(spark, schema: StructType, rows: list) -> DataFrame:
     )
 
 
-def _finish_locally(e: DataFrame) -> DataFrame | None:
-    """(id, label) of the NULL-free ``(u, v)`` edge frame ``e`` by
-    :func:`union_find`, or None when ``e`` holds more than
-    ``LOCAL_FINISH_ROWS`` rows (one bounded collect decides). Every
-    endpoint is a vertex. Both columns are typed like the edge
-    columns."""
-    rows = e.limit(LOCAL_FINISH_ROWS + 1).collect()
-    if len(rows) > LOCAL_FINISH_ROWS:
-        return None
-    labels = union_find(rows)
-    dtype = e.schema["u"].dataType
-    return local_frame(
-        e.sparkSession,
-        StructType([StructField("id", dtype), StructField("label", dtype)]),
-        list(labels.items()),
-    )
+def collect_bounded(df: DataFrame) -> list | None:
+    """The rows of ``df``, or None when it holds more than
+    ``LOCAL_FINISH_ROWS`` of them: one collect of at most one row past
+    the bound decides, so an oversized frame is never pulled whole."""
+    rows = df.limit(LOCAL_FINISH_ROWS + 1).collect()
+    return None if len(rows) > LOCAL_FINISH_ROWS else rows
 
 
 def _large_star(e_canon: DataFrame) -> DataFrame:
@@ -217,9 +206,11 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    local = _finish_locally(e)
-    if local is not None:
-        return local
+    rows = collect_bounded(e)
+    if rows is not None:  # every endpoint is a vertex, typed like u
+        dtype = e.schema["u"].dataType
+        schema = StructType([StructField(c, dtype) for c in ("id", "label")])
+        return local_frame(e.sparkSession, schema, list(union_find(rows).items()))
     # verts is consumed exactly once (the final label join) and derives
     # from the checkpointed e, so it needs no checkpoint of its own;
     # self-loops count here and nowhere after

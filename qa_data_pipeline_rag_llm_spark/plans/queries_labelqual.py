@@ -20,21 +20,26 @@ thresholds applied blind, ``/root/reference/STACK-Ingestion.py:30``):
 
 Scale notes (100 TB): the ONLY corpus-sized work is one shuffle-free
 rater projection + one partial-agg shuffle to (lang, source) or
-(source) grain; everything downstream — duels, win matrix, MM
-iterations, triangle joins — operates on model-sized frames bounded by
-|sources|² and runs as broadcast joins. Kappa's counts are exact longs
-and every n²-scale product (kappa's pe terms, the duels' q6·n
-cross-multiplications) widens to DECIMAL(38,0) via (19,0) factor casts
-(r09, advice r08) — BIGINT products overflow 2^63 around 3×10^9 rows
-per cell, three decades inside a 100 TB corpus.
+(source) grain. The duel table is |sources|²-bounded: both tournament
+queries take one bounded collect of it and finish on the driver in exact
+Python integers, raising ``ValueError`` above ``graph.LOCAL_FINISH_ROWS``
+duel rows (~316 sources). Kappa's counts are exact longs and every
+n²-scale product (kappa's pe terms, the duels' q6·n cross-multiplications)
+widens to DECIMAL(38,0) via (19,0) factor casts (r09, advice r08) —
+BIGINT products overflow 2^63 around 3×10^9 rows per cell, three decades
+inside a 100 TB corpus.
 """
 
 from __future__ import annotations
 
+from collections import Counter, defaultdict
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from qa_data_pipeline_rag_llm_spark.functions.text import quality_score
+from qa_data_pipeline_rag_llm_spark.operators import graph
 from qa_data_pipeline_rag_llm_spark.plans import oracle_fragments as O
 from qa_data_pipeline_rag_llm_spark.plans.queries import _t, register
 from qa_data_pipeline_rag_llm_spark.plans.queries_curation import (
@@ -58,7 +63,7 @@ from qa_data_pipeline_rag_llm_spark.plans.queries_text import _quality_sql
 K_QUAL_T = 0.8
 
 # Bradley–Terry fixed point: strength 1.0 ≡ 10^6; every MM step is
-# integer floor-div so Spark and DuckDB replay identical iterates
+# integer floor-div so Python and DuckDB replay identical iterates
 # (the pagerank_cust_supp discipline, queries_graph_profile.py).
 BT_S = 1_000_000
 BT_S2 = BT_S * BT_S
@@ -274,14 +279,15 @@ _DUELS_SQL = f"""
 # the BT peel rounds (each referencing the previous round ~5×) would
 # re-expand the corpus scan 5^K times without it. The oracle strings run
 # only in DuckDB (the Spark side is the DataFrame builder), so the
-# DuckDB-specific hint is safe; it pins evaluate-once semantics exactly
-# like the Spark side's localCheckpoint discipline.
+# DuckDB-specific hint is safe; it pins evaluate-once semantics, as the
+# Spark side's one collect of the duel table does.
 
 
 def _duel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(win_s, lose_s, w) directed duel counts between sources; one
     corpus pass to (lang, source) grain, then a |sources|²-bounded
-    self-join per language stratum."""
+    self-join per language stratum. Lazy: each consumer collects it
+    once."""
     d = _t(spark, sf_dir, "documents")
     q = d.select("lang", "source", quality_score("text").alias("q"))
     agg = q.groupBy("lang", "source").agg(
@@ -317,18 +323,7 @@ def _duel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(a_wins, F.col("sb")).otherwise(F.col("sa")).alias("lose_s"),
         )
     )
-    # The duel table is model-sized (≤ |sources|² rows). Eagerly
-    # materialize it so the corpus pass runs ONCE and every downstream
-    # reference (BT iterations reference it 3×; the cycle audit's
-    # triangle joins 6×) reads the tiny materialized frame instead of
-    # replicating the scan subtree — without this the MM loop's nested
-    # self-references compounded to a 204-scan physical plan (the
-    # pagerank_cust_supp lineage-truncation discipline).
-    return (
-        duels.groupBy("win_s", "lose_s")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .localCheckpoint(eager=True)
-    )
+    return duels.groupBy("win_s", "lose_s").agg(F.count(F.lit(1)).alias("w"))
 
 
 def _bt_iter_sql(prev: str, out: str) -> str:
@@ -411,9 +406,10 @@ _PW_FINAL = f"pw{BT_EXCL_ITERS}"
     "reward-data mixing actually assumes. Every MM step is integer "
     "floor-div (the pagerank_cust_supp discipline) so DuckDB replays "
     "identical iterates as unrolled CTEs. One corpus pass to (lang, "
-    "source) grain; duels, win matrix and iterations are "
-    "|sources|²-bounded broadcast joins — model-sized at any corpus "
-    "scale. Sources without both a win and a loss WITHIN THE RETAINED "
+    "source) grain and one bounded collect of the |sources|²-sized duel "
+    "table; the peel and the MM iterations run on the driver in exact "
+    "Python integers (more than graph.LOCAL_FINISH_ROWS duel rows "
+    "raise). Sources without both a win and a loss WITHIN THE RETAINED "
     "SET are excluded (their MLE diverges to 0/∞): exclusion peels "
     f"iteratively ({BT_EXCL_ITERS} unrolled rounds — dropping a source "
     "can strand one whose only loss was to it), and the reported "
@@ -429,24 +425,28 @@ def bradley_terry_source_strengths(
     return bt_strengths(_duel_counts(spark, sf_dir))
 
 
-def _bt_wl(pw: DataFrame) -> DataFrame:
-    """(s, wins, losses) totals of a directed duel-count frame."""
-    return (
-        pw.select(
-            F.col("win_s").alias("s"),
-            F.col("w").alias("w_cnt"),
-            F.lit(0).cast("long").alias("l_cnt"),
+def _duel_rows(pw: DataFrame) -> list:
+    """The (win_s, lose_s, w) rows of ``pw`` by one
+    :func:`graph.collect_bounded`, the only Spark action of either
+    tournament query; ``ValueError`` above the bound."""
+    rows = graph.collect_bounded(pw.select("win_s", "lose_s", "w"))
+    if rows is None:
+        raise ValueError(
+            "the source tournament finishes on the driver over at most "
+            f"{graph.LOCAL_FINISH_ROWS} duel rows (LOCAL_FINISH_ROWS)"
         )
-        .unionByName(
-            pw.select(
-                F.col("lose_s").alias("s"),
-                F.lit(0).cast("long").alias("w_cnt"),
-                F.col("w").alias("l_cnt"),
-            )
-        )
-        .groupBy("s")
-        .agg(F.sum("w_cnt").alias("wins"), F.sum("l_cnt").alias("losses"))
-    )
+    return rows
+
+
+def _players(rows) -> dict:
+    """{source: [wins, losses]} over (win_s, lose_s, w) rows, for the
+    sources with ≥1 of each. A NULL source matches no key of the SQL
+    twin's joins, so it is never one."""
+    wl: dict = defaultdict(lambda: [0, 0])
+    for win, lose, w in rows:
+        wl[win][0] += w
+        wl[lose][1] += w
+    return {s: v for s, v in wl.items() if s is not None and min(v) > 0}
 
 
 def bt_strengths(pw: DataFrame) -> DataFrame:
@@ -459,77 +459,40 @@ def bt_strengths(pw: DataFrame) -> DataFrame:
     Exclusion peels iteratively (advice r08): a retained player must
     have ≥1 win and ≥1 loss against OTHER RETAINED players, and the
     reported wins/losses — the MM numerators — are recomputed from the
-    retained duel set, never from duels against excluded sources. Each
-    round either removes a player or is the fixed point, so
-    BT_EXCL_ITERS unrolled rounds converge for any tournament whose
-    peel chain is that deep; frames are |sources|²-bounded, each round
-    a broadcast-sized semi-join."""
-    cur = pw.select("win_s", "lose_s", "w")
-    for i in range(BT_EXCL_ITERS):
-        keep = (
-            _bt_wl(cur)
-            .where((F.col("wins") > 0) & (F.col("losses") > 0))
-            .select("s")
-        )
-        cur = cur.join(
-            keep.withColumnRenamed("s", "win_s"), "win_s", "leftsemi"
-        ).join(keep.withColumnRenamed("s", "lose_s"), "lose_s", "leftsemi")
-        # model-sized frame; flat lineage across rounds (the MM loop's
-        # pagerank discipline, below). Every SECOND round: each round
-        # references `cur` 3× (wl twice, the restriction once), so two
-        # uncheckpointed rounds cost a 9-node re-expansion of a tiny
-        # frame — cheaper than an extra eager job (A/B: 2.77 s vs 3.18
-        # every-round vs analysis blowup with none at sf0.1).
-        if i % 2 == 1 or i == BT_EXCL_ITERS - 1:
-            cur = cur.localCheckpoint(eager=True)
-    players = (
-        _bt_wl(cur)
-        .where((F.col("wins") > 0) & (F.col("losses") > 0))
-        .select(F.col("s").alias("source"), "wins", "losses")
-    )
-    sym = cur.select(
-        F.col("win_s").alias("s"), F.col("lose_s").alias("o"), "w"
-    ).unionByName(
-        cur.select(F.col("lose_s").alias("s"), F.col("win_s").alias("o"), "w")
-    )
-    keys = players.select(F.col("source"))
-    pairs = (
-        sym.join(keys.withColumnRenamed("source", "s"), "s", "leftsemi")
-        .join(keys.withColumnRenamed("source", "o"), "o", "leftsemi")
-        .groupBy("s", "o")
-        .agg(F.sum("w").alias("n"))
-    )
-    p = players.select("source", F.lit(BT_S).cast("long").alias("p"))
+    retained duel set, never from duels against excluded sources. The
+    SQL twin unrolls BT_EXCL_ITERS peel rounds (a round that drops
+    nothing is the fixed point, so the rest are skipped here), then
+    BT_ITERS MM rounds. Both run on the driver over :func:`_duel_rows`
+    in Python integers: every operand is non-negative, so ``//`` is
+    Spark's ``div``."""
+    cur = _duel_rows(pw)
+    for _ in range(BT_EXCL_ITERS):
+        keep = _players(cur)
+        kept = [r for r in cur if r[0] in keep and r[1] in keep]
+        if len(kept) == len(cur):
+            break
+        cur = kept
+    players = _players(cur)
+    n: Counter = Counter()
+    for win, lose, w in cur:
+        n[win, lose] += w
+        n[lose, win] += w
+    p = dict.fromkeys(players, BT_S)
     for _ in range(BT_ITERS):
-        terms = (
-            pairs.join(
-                p.select(F.col("source").alias("s"), F.col("p").alias("p_s")),
-                "s",
-            )
-            .join(
-                p.select(F.col("source").alias("o"), F.col("p").alias("p_o")),
-                "o",
-            )
-            .select(
-                "s", F.expr(f"(n * {BT_S2}) div (p_s + p_o)").alias("t")
-            )
-        )
-        denom = terms.groupBy("s").agg(F.sum("t").alias("d"))
-        p = (
-            players.join(denom, players.source == denom.s)
-            .select(
-                players.source,
-                F.expr(
-                    f"CAST((wins * {BT_S2}) div "
-                    "greatest(d, CAST(1 AS BIGINT)) AS BIGINT)"
-                ).alias("p"),
-            )
-            # strength table is |players| rows; truncating lineage per
-            # iteration keeps the plan flat (pagerank discipline)
-            .localCheckpoint(eager=True)
-        )
-    return players.join(p, "source").select(
-        "source", "wins", "losses", F.col("p").alias("strength_e6")
+        # the SQL twin's inner joins: a pair needs both strengths, and a
+        # player left without a pair has no denominator and drops
+        d: Counter = Counter()
+        for (s, o), n_so in n.items():
+            if s in p and o in p:
+                d[s] += n_so * BT_S2 // (p[s] + p[o])
+        p = {s: players[s][0] * BT_S2 // max(v, 1) for s, v in d.items()}
+    cols = [StructField("source", pw.schema["win_s"].dataType)] + [
+        StructField(c, LongType()) for c in ("wins", "losses", "strength_e6")
+    ]
+    return graph.local_frame(
+        pw.sparkSession,
+        StructType(cols),
+        [(s, *players[s], p[s]) for s in sorted(p)],
     )
 
 
@@ -572,8 +535,9 @@ def bt_strengths(pw: DataFrame) -> DataFrame:
     "model fit to it trades off contradictions, so this rate is the "
     "ceiling check to run BEFORE bradley_terry_source_strengths is "
     "trusted. Each directed 3-cycle is counted once (anchored at its "
-    "least-named source). All joins run on the |sources|²-bounded edge "
-    "frame — broadcast-sized at any corpus scale; the corpus is "
+    "least-named source). The triangles and cycles are counted on the "
+    "driver over one bounded collect of the |sources|²-sized duel table "
+    "(more than graph.LOCAL_FINISH_ROWS duel rows raise); the corpus is "
     "touched once, in the shared duel pass.",
 )
 def preference_cycle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -581,64 +545,39 @@ def preference_cycle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def tournament_cycles(pw: DataFrame) -> DataFrame:
-    """Majority-win tournament + intransitivity rate over a directed
-    duel-count frame (win_s, lose_s, w) → one row (n_nodes_raw, n_edges,
-    n_triangles, n_cycles, cycle_rate). Separated from the registry
-    builder for direct property testing (a rock-paper-scissors duel
-    frame must rate 1.0; any transitive tournament 0.0)."""
-    x = F.least("win_s", "lose_s")
-    y = F.greatest("win_s", "lose_s")
-    net = (
-        pw.select(
-            x.alias("x"),
-            y.alias("y"),
-            F.when(F.col("win_s") < F.col("lose_s"), F.col("w"))
-            .otherwise(-F.col("w"))
-            .alias("signed"),
-        )
-        .groupBy("x", "y")
-        .agg(F.sum("signed").alias("net"))
-        .where(F.col("net") != 0)
+    """Majority-win tournament + intransitivity rate over a NULL-free
+    directed duel-count frame (win_s, lose_s, w) → one row (n_nodes_raw,
+    n_edges, n_triangles, n_cycles, cycle_rate). Separated from the
+    registry builder for direct property testing (a rock-paper-scissors
+    duel frame must rate 1.0; any transitive tournament 0.0).
+
+    The four counts are the SQL twin's joins, counted on the driver over
+    :func:`_duel_rows`; ``cycle_rate`` stays Spark's ``round``, a
+    projection over the one-row local frame."""
+    net: Counter = Counter()
+    for win, lose, w in _duel_rows(pw):
+        net[min(win, lose), max(win, lose)] += w if win < lose else -w
+    und = {xy for xy, v in net.items() if v}
+    edges = {(x, y) if net[x, y] > 0 else (y, x) for x, y in und}
+    up, succ = defaultdict(set), defaultdict(set)
+    for x, y in und:
+        up[x].add(y)
+    for x, y in edges:
+        succ[x].add(y)
+    # u1 = (a, b), u2 = (b, c), u3 = (a, c): each triangle once, a < b < c
+    n_triangles = sum(len(up[a] & up[b]) for a, b in und)
+    # e1 = (a, b), e2 = (b, c), e3 = (c, a), anchored at its least source
+    n_cycles = sum(
+        a < min(b, c) and a in succ[c] for a, b in edges for c in succ[b]
     )
-    edges = net.select(
-        F.when(F.col("net") > 0, F.col("x")).otherwise(F.col("y")).alias("src"),
-        F.when(F.col("net") > 0, F.col("y")).otherwise(F.col("x")).alias("dst"),
+    counts = ("n_nodes_raw", "n_edges", "n_triangles", "n_cycles")
+    out = graph.local_frame(
+        pw.sparkSession,
+        StructType([StructField(c, LongType()) for c in counts]),
+        [(len(set().union(*und)), len(edges), n_triangles, n_cycles)],
     )
-    und = net.select(F.col("x").alias("a"), F.col("y").alias("b"))
-    tri = (
-        und.alias("u1")
-        .join(und.alias("u2"), F.col("u2.a") == F.col("u1.b"))
-        .join(
-            und.alias("u3"),
-            (F.col("u3.a") == F.col("u1.a")) & (F.col("u3.b") == F.col("u2.b")),
-        )
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
-    )
-    cyc = (
-        edges.alias("e1")
-        .join(edges.alias("e2"), F.col("e2.src") == F.col("e1.dst"))
-        .join(
-            edges.alias("e3"),
-            (F.col("e3.src") == F.col("e2.dst"))
-            & (F.col("e3.dst") == F.col("e1.src")),
-        )
-        .where(
-            (F.col("e1.src") < F.col("e2.src"))
-            & (F.col("e1.src") < F.col("e3.src"))
-        )
-        .agg(F.count(F.lit(1)).alias("n_cycles"))
-    )
-    nodes = und.select(F.col("a").alias("s")).unionByName(
-        und.select(F.col("b").alias("s"))
-    )
-    n_nodes = nodes.distinct().agg(F.count(F.lit(1)).alias("n_nodes_raw"))
-    n_edges = edges.agg(F.count(F.lit(1)).alias("n_edges"))
-    out = n_nodes.crossJoin(n_edges).crossJoin(tri).crossJoin(cyc)
     return out.select(
-        "n_nodes_raw",
-        "n_edges",
-        "n_triangles",
-        "n_cycles",
+        *counts,
         F.when(F.col("n_triangles") == 0, F.lit(None).cast("double"))
         .otherwise(F.round(F.col("n_cycles") * 1.0 / F.col("n_triangles"), 6))
         .alias("cycle_rate"),

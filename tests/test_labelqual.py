@@ -13,12 +13,18 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from qa_data_pipeline_rag_llm_spark.operators import graph
+
+# the registry module before queries_labelqual: entering the plans
+# package through queries_labelqual is a circular import
+from qa_data_pipeline_rag_llm_spark.plans.queries import REGISTRY
 from qa_data_pipeline_rag_llm_spark.plans.queries_labelqual import (
     BT_S,
     _kappa_agg,
     bt_strengths,
     tournament_cycles,
 )
+from tests.conftest import SF_DIR
 
 
 def _raters(spark, rows):
@@ -219,3 +225,66 @@ def test_cycles_each_directed_cycle_counted_once(spark):
     out = tournament_cycles(pw).collect()[0]
     assert out.n_triangles == 3 and out.n_cycles == 2
     assert out.cycle_rate == pytest.approx(0.666667, abs=1e-6)
+
+
+# --------------------------------------------------------------------------
+# The driver finish: one bounded collect of the duel table
+
+
+def test_zero_duels_give_no_strengths_and_one_undecided_audit_row(spark):
+    pw = _duels(spark, [])
+    bt = bt_strengths(pw)
+    assert bt.dtypes == [
+        ("source", "string"),
+        ("wins", "bigint"),
+        ("losses", "bigint"),
+        ("strength_e6", "bigint"),
+    ]
+    assert bt.collect() == []
+    audit = tournament_cycles(pw)
+    assert audit.dtypes == [
+        ("n_nodes_raw", "bigint"),
+        ("n_edges", "bigint"),
+        ("n_triangles", "bigint"),
+        ("n_cycles", "bigint"),
+        ("cycle_rate", "double"),
+    ]
+    assert [tuple(r) for r in audit.collect()] == [(0, 0, 0, 0, None)]
+
+
+RPS = [("A", "B", 2), ("B", "C", 2), ("C", "A", 1)]
+
+
+def test_duel_table_over_the_bound_raises(spark, monkeypatch):
+    """More than graph.LOCAL_FINISH_ROWS duel rows raise ValueError
+    naming the bound, in both tournament queries; at the bound both
+    still finish, with the rows the default bound gives."""
+    pw = _duels(spark, RPS)
+    want_bt = sorted(tuple(r) for r in bt_strengths(pw).collect())
+    want_audit = [tuple(r) for r in tournament_cycles(pw).collect()]
+    monkeypatch.setattr(graph, "LOCAL_FINISH_ROWS", len(RPS))
+    assert sorted(tuple(r) for r in bt_strengths(pw).collect()) == want_bt
+    assert [tuple(r) for r in tournament_cycles(pw).collect()] == want_audit
+    monkeypatch.setattr(graph, "LOCAL_FINISH_ROWS", len(RPS) - 1)
+    for fn in (bt_strengths, tournament_cycles):
+        with pytest.raises(ValueError, match="LOCAL_FINISH_ROWS"):
+            fn(pw)
+
+
+def test_bradley_terry_job_budget(spark, tables):
+    """bradley_terry_source_strengths starts at most 5 Spark jobs while
+    it is built (the one bounded collect of the duel table, which AQE
+    runs stage by stage), and collecting its LocalTableScan result
+    starts none. Read from the status tracker under a job group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("test-bt-build", "bradley_terry_source_strengths")
+        out = REGISTRY["bradley_terry_source_strengths"].spark(spark, SF_DIR)
+        sc.setJobGroup("test-bt-collect", "collect")
+        got = out.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(tracker.getJobIdsForGroup("test-bt-build")) <= 5
+    assert tracker.getJobIdsForGroup("test-bt-collect") == []
+    assert got and all(r.strength_e6 > 0 for r in got)

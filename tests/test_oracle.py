@@ -31,6 +31,8 @@ ZERO_ROW_CASES = [
     ("bpe_learn_merges_documents", "documents", 0),
     ("kmeans_fixedpoint_embeddings", "embeddings", 0),
     ("kmeans_clusters", "embeddings", 1),
+    ("bradley_terry_source_strengths", "documents", 0),
+    ("preference_cycle_audit", "documents", 1),
 ]
 
 
@@ -43,8 +45,10 @@ def test_iterative_query_zero_rows_matches_oracle(
     name, table, n_rows, spark, tmp_path
 ):
     """An iterative query over a zero-row input table returns the rows
-    its DuckDB oracle does — zero for the recursive CTEs, the one verdict
-    row for kmeans_clusters — with no crash on an empty first round."""
+    its DuckDB oracle does — zero for the recursive CTEs and the
+    Bradley–Terry loops, the one verdict row for kmeans_clusters and the
+    one audit row for preference_cycle_audit — with no crash on an empty
+    first round."""
     import duckdb
 
     path = tmp_path / f"{table}.parquet"

@@ -784,13 +784,14 @@ def test_jaccard_verification_runs_on_set_arrays(spark, name, max_generates):
     ["bradley_terry_source_strengths", "preference_cycle_audit"],
 )
 def test_tournament_plans_are_model_sized(spark, name):
-    """The duel table is eagerly materialized (pagerank lineage
-    discipline): the FINAL plan must contain no parquet scan at all —
-    everything downstream of the single corpus pass operates on the
-    |sources|²-bounded frame. Without the checkpoint the MM loop's
-    nested self-references compounded to a 204-scan plan."""
-    plan = _final_plan(spark, name)
+    """The one corpus pass ends in a bounded collect of the
+    |sources|²-sized duel table while the frame is built: the result
+    plan is a local table, with no parquet scan, no exchange and no
+    cartesian join left to run."""
+    plan = _plan(spark, name)
+    assert "LocalTableScan" in plan
     assert ".parquet" not in plan
+    assert "Exchange" not in plan
     assert "CartesianProduct" not in plan
 
 
