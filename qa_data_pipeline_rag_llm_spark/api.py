@@ -269,11 +269,6 @@ def curate(
       (eager; on the driver at ≤ ``LOCAL_FINISH_ROWS`` edges, else
       O(log n) rounds), and 1:1 doc_id joins, returned lazily.
     """
-    # anchor on the canonical registry module FIRST: entering the plans
-    # package through queries_curation leaves it mid-import when
-    # queries_streaming's oracle composition needs its registrations
-    # (the bottom-import block must run in queries.py's own order)
-    import qa_data_pipeline_rag_llm_spark.plans.queries  # noqa: F401
     from qa_data_pipeline_rag_llm_spark.functions.text import word_shingles
     from qa_data_pipeline_rag_llm_spark.operators import graph
     from qa_data_pipeline_rag_llm_spark.operators.dedup import (

@@ -19,10 +19,10 @@ construction) — every round pays Spark's fixed per-job cost however few
 edges are left, and a near-dup pair graph is often a few dozen edges.
 The distributed rounds run only above the bound.
 
-Three driver-side helpers serve these finishes (here, in ``api.curate``
-and in the source-tournament queries), under the one bound
-``LOCAL_FINISH_ROWS``: :func:`collect_bounded`, the one bounded collect;
-:func:`union_find` (Python id order, root = minimum id); and
+Three driver-side helpers serve these finishes (here, in ``api.curate``,
+in the source-tournament queries and in BPE merge learning), under the
+one bound ``LOCAL_FINISH_ROWS``: :func:`collect_bounded`, the one bounded
+collect; :func:`union_find` (Python id order, root = minimum id); and
 :func:`local_frame`, the one builder of an Arrow-backed result frame,
 whose ``LocalTableScan`` costs no job to collect.
 
@@ -40,11 +40,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 # Edge rows at or below which a graph finishes on the driver, likewise
-# api.curate's documents and candidate pairs and the source tournament's
-# duel rows (a bound, not an option: 10^5 id pairs are a few MB of
-# driver memory; curate's shingle sets, which are not, must also fit
-# the session's broadcast threshold).
+# api.curate's documents and candidate pairs, the source tournament's
+# duel rows and BPE's word types (a bound, not an option: 10^5 id pairs
+# are a few MB of driver memory; curate's shingle sets, which are not,
+# must also fit the session's broadcast threshold).
 LOCAL_FINISH_ROWS = 100_000
+# Two-star rounds before the distributed loop gives up: O(log n) rounds
+# reach the fixpoint on any topology, plus one no-change round to see it.
+MAX_ROUNDS = 30
 
 
 def union_find(edges) -> dict:
@@ -169,7 +172,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 30,
 ) -> DataFrame:
     """(src, dst) undirected edges → (id, label), one row per vertex.
 
@@ -181,14 +183,14 @@ def connected_components(
 
     At most ``LOCAL_FINISH_ROWS`` canonical edges finish on the driver
     (module docstring); above that bound the large-star / small-star
-    rounds run, and ``max_iter`` caps them.
+    rounds run, and ``MAX_ROUNDS`` caps them.
 
     Convergence detection: a (count, xor-of-pair-hashes) signature of
     the canonical directed edge set — two scalar aggregates, no
     driver-side edge materialization. Signature-based detection needs
-    one extra NO-CHANGE round to observe the fixpoint, so ``max_iter``
-    must be at least (rounds-to-converge + 1); the default 30 leaves
-    ample headroom over the O(log n) bound.
+    one extra NO-CHANGE round to observe the fixpoint, so ``MAX_ROUNDS``
+    must be at least (rounds-to-converge + 1); 30 leaves ample headroom
+    over the O(log n) bound.
     """
     # materialize the edge input FIRST (r11): the caller's edge subtree
     # is often expensive (e.g. density_cluster_graph's cosine-verified
@@ -235,7 +237,7 @@ def connected_components(
 
     prev = None
     converged = False
-    for _ in range(max_iter):
+    for _ in range(MAX_ROUNDS):
         # one materialization per round (r11), and as of r13 one JOB per
         # round: the checkpoint is LAZY and the signature aggregate is
         # the action that materializes it — the eager-checkpoint +
@@ -257,9 +259,9 @@ def connected_components(
         # vertex. A silently corrupt labeling poisons every downstream
         # dedup decision (review r03), so fail loud.
         raise RuntimeError(
-            f"two-star did not detect a fixpoint in max_iter={max_iter} "
-            "rounds; raise max_iter (O(log n)+1 rounds suffice for any "
-            "topology — detection costs one extra no-change round)"
+            f"two-star did not detect a fixpoint in MAX_ROUNDS={MAX_ROUNDS} "
+            "rounds (O(log n)+1 rounds suffice for any topology — "
+            "detection costs one extra no-change round)"
         )
     # converged: e is (node → component-min). Roots and isolated vertices
     # label themselves.

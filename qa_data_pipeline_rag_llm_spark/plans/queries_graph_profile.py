@@ -23,7 +23,6 @@ from qa_data_pipeline_rag_llm_spark.plans.queries import _t, register
 
 PR_ITERS = 5
 PR_ONE = 1_000_000_000  # rank 1.0 in fixed-point
-PR_CKPT_EVERY = 6  # lineage budget between eager checkpoints (see loop)
 
 
 @register(
@@ -58,11 +57,12 @@ PR_CKPT_EVERY = 6  # lineage budget between eager checkpoints (see loop)
     "the bipartite customer↔supplier co-purchase graph, in exact "
     "fixed-point arithmetic (1.0 ≡ 10^9; floor-div contributions) so the "
     "iterative loop is bit-reproducible and replayable as a DuckDB "
-    "recursive CTE. Spark side: edges+degrees computed once and "
-    "persisted, one join+agg shuffle per iteration — the standard "
-    "DataFrame-iteration pattern (GraphX-free). Long sums suffice at "
-    "this degree distribution; the 100 TB upgrade is DECIMAL(38,0) "
-    "accumulation with the same floor-div semantics.",
+    "recursive CTE. Spark side: one lazy plan of the unrolled rounds "
+    "(join → r div out_deg → groupBy(dst) each), so building it runs no "
+    "job and the planner reuses the edge and degree exchanges across "
+    "rounds (GraphX-free). Long sums suffice at this degree "
+    "distribution; the 100 TB upgrade is DECIMAL(38,0) accumulation with "
+    "the same floor-div semantics.",
 )
 def pagerank_cust_supp(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -77,44 +77,20 @@ def pagerank_cust_supp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     edges = fwd.unionByName(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
-    # contribution edges, reused every iteration — persist once
-    edges_deg = edges.join(deg, "src").persist()
+    edges_deg = edges.join(deg, "src")
     ranks = edges.select(F.col("src").alias("node")).distinct().withColumn(
         "r", F.lit(PR_ONE).cast("long")
     )
     base = PR_ONE * 15 // 100
-    # NOT a broadcast-join candidate despite the tiny rank vector:
-    # interleaved A/B (r12, 3 trials) measured forced-broadcast at
-    # parity-to-slightly-slower (6.4–6.7 s vs 6.3–6.4 s shuffle) — the
-    # checkpointed ranks are small enough that AQE already picks the
-    # right exchange, and the per-iteration wall is the dst aggregation
-    # shuffle, which broadcasting cannot remove.
-    try:
-        for i in range(PR_ITERS):
-            contrib = edges_deg.join(
-                ranks, edges_deg.src == ranks.node
-            ).select("dst", F.expr("r div out_deg").alias("c"))
-            ranks = (
-                contrib.groupBy("dst")
-                .agg(F.expr(f"CAST({base} + (85 * sum(c)) div 100 AS BIGINT)").alias("r"))
-                .withColumnRenamed("dst", "node")
-            )
-            # Lineage-budget checkpointing (r12 A/B, outputs identical):
-            # with edges_deg PERSISTED, a 5-deep join/agg chain plans and
-            # runs fine in ONE job — per-iteration eager checkpoints paid
-            # 5 job launches for nothing (7.76 → 4.86 s at sf0.1). The
-            # earlier "~10x slower unchecked" adjudication predates the
-            # persisted edge frame. Truncate only when the unchecked
-            # depth hits the budget — the guard a higher PR_ITERS needs —
-            # and ALWAYS checkpoint the final ranks (the unpersist below
-            # relies on nothing returned still reading edges_deg).
-            if (i + 1) % PR_CKPT_EVERY == 0 or i == PR_ITERS - 1:
-                ranks = ranks.localCheckpoint(eager=True)
-    finally:
-        # the final ranks are an eager checkpoint — nothing returned still
-        # reads edges_deg, so its cached blocks must not outlive the query
-        # (long-lived sessions run ~150 registry queries; ADVICE r01)
-        edges_deg.unpersist()
+    for _ in range(PR_ITERS):
+        contrib = edges_deg.join(
+            ranks, edges_deg.src == ranks.node
+        ).select("dst", F.expr("r div out_deg").alias("c"))
+        ranks = (
+            contrib.groupBy("dst")
+            .agg(F.expr(f"CAST({base} + (85 * sum(c)) div 100 AS BIGINT)").alias("r"))
+            .withColumnRenamed("dst", "node")
+        )
     return ranks.select("node", F.col("r").alias("rank_e9"))
 
 

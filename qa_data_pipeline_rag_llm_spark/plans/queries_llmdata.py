@@ -14,9 +14,13 @@ modular branch makes the counts vary by row.
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from qa_data_pipeline_rag_llm_spark.operators import graph
 from qa_data_pipeline_rag_llm_spark.operators.llmdata import (
     decontaminate,
     pii_redact,
@@ -231,18 +235,21 @@ def tfidf_topk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # BPE merge learning (Sennrich et al. 2016): the tokenizer-TRAINING step of
-# a corpus pipeline, as a deterministic iterative DataFrame computation with
-# a full-loop recursive-CTE oracle (the pagerank/kmeans discipline applied
-# to subword vocabulary induction). No counterpart exists in the reference
-# (its tokenization is whatever the SentenceTransformer ships —
+# a corpus pipeline, with a full-loop recursive-CTE oracle (the
+# pagerank/kmeans discipline applied to subword vocabulary induction). The
+# corpus pass is distributed; the merges run on the driver over the
+# word-type vocabulary. No counterpart exists in the reference (its
+# tokenization is whatever the SentenceTransformer ships —
 # PLATFORM-contextual-Chunking.py:52-77); a 100 TB pipeline trains its own.
 #
 # Symbol strings carry a '·' marker BEFORE every token ("·l·o·w·_"): a merge
-# is then plain `replace(sym, '·a·b', '·ab')`, which both engines apply
-# leftmost-non-overlapping over token boundaries — the marker makes a
-# cross-boundary match impossible (a pattern starts with '·' and symbols
-# never contain it) and the shared middle marker makes overlapping matches
-# consume correctly ("·a·a·a" + (a,a) -> "·aa·a", the BPE scan order).
+# is then plain `replace(sym, '·a·b', '·ab')`, which Python, Spark and
+# DuckDB all apply leftmost-non-overlapping, and the shared middle marker
+# makes overlapping matches consume correctly ("·a·a·a" + (a,a) -> "·aa·a",
+# the BPE scan order). The pattern's START sits on a token boundary, its
+# END does not: '·a·b' also matches the head of a longer token 'bc'
+# ("·a·bc" -> "·abc"). The oracle replays the same replace, so the rows
+# agree; a token-list merge would not.
 
 BPE_K = 8           # merges to learn
 BPE_MIN_FREQ = 5    # word-type frequency floor (both engines replay it)
@@ -294,30 +301,18 @@ def _o_bpe() -> str:
     """
 
 
-# toks from a marker string; position filter keeps 1..size-1 ascending
-# (sequence(1, size) is always ascending; sequence(1, 0) would DESCEND)
-_BPE_TOKS = "filter(split(sym, '·'), x -> x != '')"
-_BPE_PAIRS_SPARK = (
-    "transform(filter(sequence(1, size(toks)), i -> i < size(toks)), "
-    "i -> struct(element_at(toks, i) AS a, element_at(toks, i + 1) AS b))"
-)
-
-
 @register(
     "bpe_learn_merges_documents",
     _o_bpe(),
     doc=f"BPE merge learning (top-{BPE_K} merges, Sennrich et al. 2016) "
-    "over the documents corpus — tokenizer TRAINING as a deterministic "
-    "iterative plan, hash-matched against a DuckDB recursive CTE that "
-    "replays every round (argmax ties broken by (count desc, pair "
-    "lexicographic)). Corpus-sized work happens exactly once: one "
-    "map-side-combinable tokenize+groupBy(word) shuffle down to the "
-    "word-TYPE vocabulary (Heaps-law bounded — millions of types at "
-    "100 TB, not trillions of tokens); all iterations run on the "
-    "persisted vocab (pair counts are vocab-sized partial aggs, merge "
-    "application is a narrow replace projection), with one 1-row "
-    "bounded collect per merge. This is the standard distributed-BPE "
-    "shape: corpus pass for counts, vocabulary-resident training loop.",
+    "over the documents corpus — tokenizer TRAINING, hash-matched against "
+    "a DuckDB recursive CTE that replays every round (argmax ties broken "
+    "by (count desc, pair lexicographic)). Corpus-sized work happens "
+    "exactly once: one map-side-combinable tokenize+groupBy(word) shuffle "
+    "down to the word-TYPE vocabulary (Heaps-law bounded), collected once "
+    "by graph.collect_bounded (more than graph.LOCAL_FINISH_ROWS word "
+    "types raise). The merges run on the driver over the (freq, symbols) "
+    "pairs and return as a local table, so no Spark job runs per merge.",
 )
 def bpe_learn_merges_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").where(F.col("text").isNotNull())
@@ -331,42 +326,29 @@ def bpe_learn_merges_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
         .where(F.col("freq") >= BPE_MIN_FREQ)
-        .select(
-            "freq",
-            F.expr("concat('·', concat_ws('·', split(word, '')), '·_')").alias(
-                "sym"
-            ),
-        )
-        .persist()
     )
-    merges: list[tuple[int, str, str, int]] = []
-    vocab = words
-    try:
-        for it in range(1, BPE_K + 1):
-            top = (
-                vocab.select("freq", F.expr(_BPE_TOKS).alias("toks"))
-                .select("freq", F.explode(F.expr(_BPE_PAIRS_SPARK)).alias("p"))
-                .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-                .agg(F.sum("freq").alias("cnt"))
-                .orderBy(F.desc("cnt"), "a", "b")
-                .limit(1)
-                .collect()
-            )
-            if not top:  # no symbol pair left: keep the merges learned so far
-                break
-            best = top[0]
-            a, b = best["a"], best["b"]
-            # symbols are [a-z_]+ by construction — safe to splice into
-            # the replace() literal (and fail loud if that ever changes)
-            assert a.replace("_", "").isalpha() or a == "_", a
-            assert b.replace("_", "").isalpha() or b == "_", b
-            merges.append((it, a, b, int(best["cnt"])))
-            vocab = vocab.withColumn(
-                "sym", F.expr(f"replace(sym, '·{a}·{b}', '·{a}{b}')")
-            )
-        return spark.createDataFrame(
-            merges,
-            "merge_rank int, left_sym string, right_sym string, pair_count long",
+    vocab = graph.collect_bounded(words.select("freq", "word"))
+    if vocab is None:
+        raise ValueError(
+            "BPE training finishes on the driver over at most "
+            f"{graph.LOCAL_FINISH_ROWS} word types (LOCAL_FINISH_ROWS)"
         )
-    finally:
-        words.unpersist()
+    syms = [(freq, "·" + "·".join(word) + "·_") for freq, word in vocab]
+    merges: list[tuple[int, str, str, int]] = []
+    for rank in range(1, BPE_K + 1):
+        counts: Counter = Counter()
+        for freq, sym in syms:
+            toks = [t for t in sym.split("·") if t]
+            for pair in zip(toks, toks[1:]):
+                counts[pair] += freq
+        if not counts:  # no symbol pair left: keep the merges learned so far
+            break
+        # count desc, then (a, b) ascending: on [a-z_] symbols Python's
+        # code-point order is Spark's and DuckDB's binary string order
+        (a, b), cnt = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        merges.append((rank, a, b, cnt))
+        syms = [(freq, sym.replace(f"·{a}·{b}", f"·{a}{b}")) for freq, sym in syms]
+    schema = StructType.fromDDL(
+        "merge_rank int, left_sym string, right_sym string, pair_count long"
+    )
+    return graph.local_frame(spark, schema, merges)

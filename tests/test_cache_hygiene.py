@@ -1,7 +1,7 @@
 """No registry query may leak cached blocks into a long-lived session
 (VERDICT r02 #9): a lazily-returned DataFrame can never unpersist, so
 persist() is only legal inside a query when a try/finally releases it
-before return (pagerank does this around localCheckpoint)."""
+before return."""
 
 from __future__ import annotations
 
@@ -10,8 +10,8 @@ from pyspark.sql import functions as F
 from qa_data_pipeline_rag_llm_spark.plans.queries import REGISTRY
 from tests.conftest import SF_DIR
 
-# every query that historically persisted, plus the iterative ones that
-# still legitimately persist-then-release inside a try/finally
+# every query that historically persisted or checkpointed inside its
+# build (pagerank did both until it became one lazy plan)
 _FORMERLY_LEAKY = [
     "oov_rate_by_source",
     "label_centroid_distances",
@@ -60,8 +60,8 @@ def _drain(spark, target_ids: set[int], deadline_s: float) -> set[int]:
 
 
 def test_registry_queries_leave_no_cached_rdds(spark):
-    """persist() leaks live forever; localCheckpoint blocks (pagerank /
-    kmeans results) are released by the ContextCleaner once the result
+    """persist() leaks live forever; localCheckpoint blocks (kmeans
+    results) are released by the ContextCleaner once the result
     DataFrame is dropped — so the real-session contract is: after the
     consumer lets go of the result, the cache drains to baseline.
 

@@ -99,16 +99,15 @@ def test_twostar_edge_set_shrinks_to_star(spark):
     assert n_non_roots == n_vertices - n_components
 
 
-def test_twostar_fails_loud_when_budget_exhausted(spark):
-    """Exhausting max_iter without a fixpoint must raise, not emit a
+def test_twostar_fails_loud_when_budget_exhausted(spark, monkeypatch):
+    """Exhausting MAX_ROUNDS without a fixpoint must raise, not emit a
     corrupt multi-row-per-vertex labeling (review r03)."""
-    import pytest as _pytest
-
+    monkeypatch.setattr(graph, "MAX_ROUNDS", 1)
     e = spark.createDataFrame(
         [(i, i + 1) for i in range(64)], "src long, dst long"
     )
-    with _pytest.raises(RuntimeError, match="did not detect a fixpoint"):
-        connected_components(e, max_iter=1).collect()
+    with pytest.raises(RuntimeError, match="did not detect a fixpoint"):
+        connected_components(e).collect()
 
 
 def _blob_edges() -> list[tuple[int, int]]:

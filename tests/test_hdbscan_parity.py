@@ -373,7 +373,6 @@ def test_density_cluster_graph_agreement_with_exact_hdbscan(spark):
     """The quantified M2 parity claim for the r11 pair-graph operator
     (measured: ARI(graph, exact) 0.88–0.91 across noise levels,
     ARI(graph, truth) 0.92–1.00, noise Jaccard 0.82–0.87)."""
-    import qa_data_pipeline_rag_llm_spark.plans.queries  # registry import order  # noqa: F401
     from qa_data_pipeline_rag_llm_spark.operators.clustering import (
         density_cluster_graph,
     )
@@ -429,7 +428,6 @@ def test_dup_collapse_is_connectivity_exact(spark):
     the labels: duplicating every vector 3× yields each copy the same
     cluster as the original, and a lone vector duplicated ≥min_cluster_
     size times becomes its own cluster (copies always co-cluster)."""
-    import qa_data_pipeline_rag_llm_spark.plans.queries  # noqa: F401
     from qa_data_pipeline_rag_llm_spark.operators.clustering import (
         density_cluster_graph,
     )
@@ -463,7 +461,6 @@ def test_graph_cluster_arrow_kernel_label_parity(spark):
     """kernel='arrow' (production verification) must produce the same
     LABELS as the oracle-exact fold on the planted fixture — the same
     verdict-parity contract embedding_near_dup pins for its kernels."""
-    import qa_data_pipeline_rag_llm_spark.plans.queries  # noqa: F401
     from qa_data_pipeline_rag_llm_spark.operators.clustering import (
         density_cluster_graph,
     )
@@ -492,7 +489,6 @@ def test_single_cell_variant_is_strictly_coarser(spark):
     a true cluster shatters across SRP cells. The pin is the ORDERING
     (graph variant strictly better), which holds at every noise level,
     not the absolute value."""
-    import qa_data_pipeline_rag_llm_spark.plans.queries  # noqa: F401
     from qa_data_pipeline_rag_llm_spark.operators.clustering import (
         density_cluster,
         density_cluster_graph,

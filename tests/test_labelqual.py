@@ -14,9 +14,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from qa_data_pipeline_rag_llm_spark.operators import graph
-
-# the registry module before queries_labelqual: entering the plans
-# package through queries_labelqual is a circular import
 from qa_data_pipeline_rag_llm_spark.plans.queries import REGISTRY
 from qa_data_pipeline_rag_llm_spark.plans.queries_labelqual import (
     BT_S,

@@ -90,3 +90,38 @@ def test_bpe_merges_are_wellformed_and_monotone(spark):
     for r in rows:
         assert r.left_sym in known and r.right_sym in known, r
         known.add(r.left_sym + r.right_sym)
+
+
+def test_bpe_raises_above_the_driver_bound(spark, monkeypatch):
+    """BPE trains on the driver over at most graph.LOCAL_FINISH_ROWS
+    word types; above the bound it raises, naming it."""
+    import pytest
+
+    from qa_data_pipeline_rag_llm_spark.operators import graph
+    from qa_data_pipeline_rag_llm_spark.plans.queries import REGISTRY
+
+    monkeypatch.setattr(graph, "LOCAL_FINISH_ROWS", 2)
+    with pytest.raises(ValueError, match="LOCAL_FINISH_ROWS"):
+        REGISTRY["bpe_learn_merges_documents"].spark(spark, SF_DIR)
+
+
+def test_bpe_job_budget(spark, tables):
+    """bpe_learn_merges_documents starts at most 3 Spark jobs while it
+    is built (the one bounded collect of the word-type vocabulary, which
+    AQE runs stage by stage), and collecting its LocalTableScan result
+    starts none. Read from the status tracker under a job group."""
+    from qa_data_pipeline_rag_llm_spark.plans.queries import REGISTRY
+    from qa_data_pipeline_rag_llm_spark.plans.queries_llmdata import BPE_K
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("test-bpe-build", "bpe_learn_merges_documents")
+        out = REGISTRY["bpe_learn_merges_documents"].spark(spark, SF_DIR)
+        sc.setJobGroup("test-bpe-collect", "collect")
+        got = out.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(tracker.getJobIdsForGroup("test-bpe-build")) <= 3
+    assert tracker.getJobIdsForGroup("test-bpe-collect") == []
+    assert len(got) == BPE_K

@@ -102,12 +102,11 @@ def test_bench_queries_never_cartesian(spark, name):
 #   cross_join_nation_region — an intentional cartesian (25×5 dims);
 #   streaming_* / pysource_api_stream — building them RUNS the stream to
 #     completion (their returned plan is a materialized checkpoint scan);
-#   pagerank / kmeans_fixedpoint / dedup_clusters / near_dup_prune —
-#     iterative: construction executes eager checkpoints.
+#   kmeans_fixedpoint / dedup_clusters / near_dup_prune — iterative:
+#     construction executes eager checkpoints.
 _CARTESIAN_GATE_EXCLUDE = {"cross_join_nation_region"}
 _CARTESIAN_GATE_SKIP_PREFIXES = ("streaming_", "pysource_api_stream")
 _CARTESIAN_GATE_SKIP = {
-    "pagerank_cust_supp",
     "kmeans_fixedpoint_embeddings",
     "dedup_clusters_minhash",
     "near_dup_prune_documents",
@@ -863,3 +862,58 @@ def test_lm_chain_reuses_tokenization_stages(spark):
     for name in ("lm_quality_correlation", "lm_ref_surprisal_by_source"):
         plan = _final_plan(spark, name)
         assert plan.count("ReusedExchange") >= 2, name
+
+
+def test_pagerank_builds_without_jobs(spark, tables):
+    """pagerank_cust_supp is one lazy plan: building it starts no Spark
+    job (read from the status tracker under a job group)."""
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("test-pagerank-build", "pagerank_cust_supp")
+        REGISTRY["pagerank_cust_supp"].spark(spark, SF_DIR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("test-pagerank-build") == []
+
+
+def test_every_plans_module_imports_first():
+    """Any plans module can be the first one a process imports: the
+    package imports the registry before it. Each subprocess imports its
+    share of the modules in turn, clearing the package from sys.modules
+    in between (four at once: every import runs the whole registry)."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    import qa_data_pipeline_rag_llm_spark.plans as plans
+
+    script = (
+        "import importlib, sys\n"
+        "pkg = 'qa_data_pipeline_rag_llm_spark.plans'\n"
+        "for name in sys.argv[1:]:\n"
+        "    for m in [m for m in sys.modules if m.startswith(pkg)]:\n"
+        "        del sys.modules[m]\n"
+        "    try:\n"
+        "        importlib.import_module(f'{pkg}.{name}')\n"
+        "    except ImportError as e:\n"
+        "        print(f'{name}: {e}')\n"
+    )
+    names = sorted(
+        p.stem for p in Path(plans.__file__).parent.glob("*.py")
+        if p.stem != "__init__"
+    )
+    root = Path(plans.__file__).parents[2]
+    procs = [
+        subprocess.Popen(
+            [sys.executable, "-c", script, *names[i::4]],
+            stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+            cwd=root,
+        )
+        for i in range(4)
+    ]
+    failed = []
+    for proc in procs:
+        out, err = proc.communicate(timeout=600)
+        assert proc.returncode == 0, err[-2000:]
+        failed += out.splitlines()
+    assert not failed, failed
